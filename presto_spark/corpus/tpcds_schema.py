@@ -261,10 +261,6 @@ TPCDS_TABLES: dict[str, list[str]] = {
 }
 
 
-def schema_sql(table: str) -> str:
-    return ", ".join(f"{c} {_type_of(c)}" for c in TPCDS_TABLES[table])
-
-
 def register_empty_tpcds(spark: SparkSession,
                          skip: tuple[str, ...] = ("customer",)) -> None:
     """Register every TPC-DS table as an empty temp view.  `customer`

@@ -103,16 +103,6 @@ def _clamp01(x: str) -> str:
     return f"least(1.0, greatest(0.0, {x}))"
 
 
-def _interp_channels(f: str, lo: str, hi: str) -> tuple[str, str, str]:
-    """ColorFunctions.interpolate: lerp each HSB component of the two
-    packed colors at clamped fraction ``f``, back to RGB channels."""
-    hl, sl, vl = _rgb2hsb(lo)
-    hh, sh, vh = _rgb2hsb(hi)
-    ff = _clamp01(f)
-    return _hsb_channels(
-        _lerp(ff, hl, hh), _lerp(ff, sl, sh), _lerp(ff, vl, vh))
-
-
 def _pack(r: str, g: str, b: str) -> str:
     return f"({r} * 65536 + {g} * 256 + {b})"
 

@@ -9,10 +9,13 @@ collides with a Spark builtin of different semantics (Spark refuses to
 let a SQL UDF shadow a builtin).  This module rewrites those spellings.
 
 The rewrite is regex-based on word-boundary + '(' — deliberately
-lightweight: it does not parse SQL, so a string literal containing e.g.
-``"cardinality("`` would be rewritten too.  Documented limitation; the
-alternative (full ANTLR transpile) is out of scope and the Spark parser
-catches any mis-rewrite loudly.
+lightweight: it does not parse SQL, but every pass sees the text through
+the one lexer in presto_spark/sql_lexer.py and rewrites code tokens only.
+String literals, comments and quoted identifiers pass through byte for
+byte (a double-quoted identifier is respelled with backticks, its text
+kept); the passes that read literal content — unicode and typed
+literals, datetime format patterns, JSON paths, split delimiters and
+date_add('unit', ...) — read it from the lexer's string tokens.
 """
 
 from __future__ import annotations
@@ -24,6 +27,14 @@ from presto_spark.functions.datetime_formats import (
     UnsupportedPatternError,
     joda_to_java,
     mysql_to_java,
+)
+from presto_spark.sql_lexer import (
+    CODE,
+    COMMENT,
+    IDENT,
+    STRING,
+    lex,
+    quoted_body,
 )
 
 # Pure renames, call-compatible 1:1.  (approx_distinct is NOT here — it
@@ -54,36 +65,6 @@ _simple_renames_re = re.compile(
     r"\b(" + "|".join(_SIMPLE_MAP) + r")\s*\(", re.IGNORECASE
 )
 
-# Matches one SQL string literal (with '' escapes) — used to keep every
-# regex rewrite pass out of literal text.
-_sql_string_re = re.compile(r"'(?:[^']|'')*'")
-
-
-def _sub_outside_strings(pat: re.Pattern, repl, sql: str) -> str:
-    """pat.sub(repl, ...) applied only to the code between string
-    literals — 'a[1]' or 'date_add' inside quotes must never rewrite."""
-    out = []
-    pos = 0
-    for m in _sql_string_re.finditer(sql):
-        out.append(pat.sub(repl, sql[pos:m.start()]))
-        out.append(m.group(0))
-        pos = m.end()
-    out.append(pat.sub(repl, sql[pos:]))
-    return "".join(out)
-
-
-def _string_spans(sql: str) -> list[tuple[int, int]]:
-    """[start, end) spans of every string literal — the call-scanner
-    passes below skip matches that start inside one, so a literal like
-    '... AS MAP(a, b)' is never rewritten.  (The scanners only read from
-    their input and append to an output list, so spans computed once on
-    the input stay valid for the whole pass.)"""
-    return [(m.start(), m.end()) for m in _sql_string_re.finditer(sql)]
-
-
-def _in_string(spans: list[tuple[int, int]], i: int) -> bool:
-    return any(s <= i < e for s, e in spans)
-
 # Presto array subscripts are 1-based and arr[1] is the FIRST
 # element (ArraySubscriptOperator.java); Spark's [] is 0-based — a
 # silent off-by-one for any Presto query. Rewrite integer-literal
@@ -91,23 +72,39 @@ def _in_string(spans: list[tuple[int, int]], i: int) -> bool:
 # which is 1-based in Spark, matching Presto. Map access uses
 # string/expression keys and is left alone (same semantics in both).
 # (ARRAY[1] is a literal constructor, not a subscript — skip it.)
-# Applied via _sub_outside_strings: 'a[1]' inside a literal stays put.
 _SUBSCRIPT_RULE: tuple[re.Pattern[str], object] = (
     re.compile(r"\b(\w+(?:\.\w+)*)\[(\d+)\]"),
     lambda m: m.group(0) if m.group(1).lower() == "array"
     else f"element_at({m.group(1)}, {m.group(2)})",
 )
 
+# date_add('unit', n, ts) → timestampadd(UNIT, n, ts) and
+# date_diff('unit', a, b) → timestampdiff(UNIT, a, b)
+# (DateTimeFunctions.java dateAdd/dateDiff; fires only when the 1st arg
+#  is a string literal, so Spark's 2-arg date_add(date, n) is untouched.)
+_date_unit_call_re = re.compile(r"\b(date_add|date_diff)\s*\(\s*",
+                                re.IGNORECASE)
+_DATE_UNIT_FNS = {"date_add": "timestampadd", "date_diff": "timestampdiff"}
+_comma_re = re.compile(r"\s*,")
+
+
+def _rewrite_date_units(sql: str) -> str:
+    v = lex(sql)
+    out, pos = [], 0
+    for m in v.finditer(_date_unit_call_re):
+        lit = v.literal_at(m.end()) or ""
+        unit = quoted_body(lit)
+        comma = _comma_re.match(sql, m.end() + len(lit))
+        if unit is None or comma is None or not re.fullmatch(r"\w+", unit):
+            continue
+        fn = _DATE_UNIT_FNS[m.group(1).lower()]
+        out += (sql[pos:m.start()], f"{fn}({unit.upper()},")
+        pos = comma.end()
+    return "".join(out) + sql[pos:]
+
+
 # Pattern rules with argument reshuffles, applied in order.
 _PATTERN_RULES: list[tuple[re.Pattern[str], object]] = [
-    # date_add('unit', n, ts) → timestampadd(UNIT, n, ts)
-    # (DateTimeFunctions.java dateAdd; fires only when the 1st arg is a
-    #  string literal, so Spark's 2-arg date_add(date, n) is untouched.)
-    (re.compile(r"\bdate_add\s*\(\s*'(\w+)'\s*,", re.IGNORECASE),
-     lambda m: f"timestampadd({m.group(1).upper()},"),
-    # date_diff('unit', a, b) → timestampdiff(UNIT, a, b)
-    (re.compile(r"\bdate_diff\s*\(\s*'(\w+)'\s*,", re.IGNORECASE),
-     lambda m: f"timestampdiff({m.group(1).upper()},"),
     # Presto TRY(CAST(x AS t)) → TRY_CAST(x AS t); general TRY() has no
     # Spark analog and is documented unsupported.
     (re.compile(r"\bTRY\s*\(\s*CAST\s*\(", re.IGNORECASE), "(TRY_CAST("),
@@ -169,50 +166,6 @@ _DT_FORMAT_FNS = {
 _dt_call_re = re.compile(
     r"\b(" + "|".join(_DT_FORMAT_FNS) + r")\s*\(", re.IGNORECASE
 )
-
-_literal_re = re.compile(r"^'((?:[^']|'')*)'$")
-
-
-def _split_call(sql: str, open_paren: int):
-    """Scan from the '(' at ``open_paren``; return (args, close_index) with
-    args split at top-level commas, or None if unbalanced.
-
-    Tracks '['/']' alongside parens: commas inside ARRAY[...] literals
-    and subscripts (arr[i]) are not argument separators."""
-    depth = 0
-    bdepth = 0
-    in_str = False
-    args: list[str] = []
-    start = open_paren + 1
-    i = open_paren
-    while i < len(sql):
-        c = sql[i]
-        if in_str:
-            if c == "'":
-                # '' escape stays inside the string
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(sql[start:i])
-                return args, i
-        elif c == "[":
-            bdepth += 1
-        elif c == "]":
-            bdepth -= 1
-        elif c == "," and depth == 1 and bdepth == 0:
-            args.append(sql[start:i])
-            start = i + 1
-        i += 1
-    return None
-
 
 # MySQL %v (ISO week 01-53) / %x (ISO week-year) are Presto-supported
 # (DateTimeFunctions.java rejects only %D/%U/%u/%V/%w/%X) but java.time
@@ -351,78 +304,36 @@ def _joda_unquote(p: str) -> str:
     return "".join(out)
 
 
-def _rewrite_datetime_formats(sql: str) -> str:
-    out = []
-    pos = 0
-    spans = _string_spans(sql)
-    while True:
-        m = _dt_call_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        args, close = parsed
-        lit = _literal_re.match(args[-1].strip()) if len(args) == 2 else None
-        if lit is None:
-            if len(args) == 2:
-                # Column-valued pattern: Presto evaluates patterns per row
-                # (DateTimeFunctions.java) — route to the Arrow-batched
-                # Python renderer instead of silently falling through to
-                # java.time semantics.
-                out.append(sql[pos:m.start()])
-                out.append(f"{m.group(1).lower()}_py({args[0].strip()}, "
-                           f"{args[1].strip()})")
-            else:
-                out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        target, xlate = _DT_FORMAT_FNS[m.group(1).lower()]
-        raw = lit.group(1).replace("''", "'")
-        if m.group(1).lower() == "date_format":
-            cf = _mysql_concat_form(args[0].strip(), raw)
-            if cf is not None:
-                out.append(sql[pos:m.start()])
-                out.append(cf)
-                pos = close + 1
-                continue
-        if m.group(1).lower() == "format_datetime":
-            cf = _joda_concat_form(args[0].strip(), raw)
-            if cf is not None:
-                out.append(sql[pos:m.start()])
-                out.append(cf)
-                pos = close + 1
-                continue
-        if xlate is mysql_to_java and "%" not in raw:
-            # No %-specifiers: either already java.time (idempotent
-            # re-translate) or a degenerate all-literal pattern — leave it.
-            out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        try:
-            java = xlate(raw)
-        except UnsupportedPatternError:
-            out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        out.append(sql[pos:m.start()])
-        # The /*dt*/ marker (stripped by Spark's lexer) keeps the
-        # emitted java-pattern call out of the Teradata to_date/
-        # to_timestamp macros, whose format grammar overlaps java.time
-        # spellings ('mm' means month in Teradata, minute in java.time).
-        out.append(
-            f"{target}/*dt*/({args[0].strip()}, "
-            f"'{java.replace(chr(39), chr(39) * 2)}')"
-        )
-        pos = close + 1
-    return "".join(out)
+def _build_datetime_format(name: str, args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    body = quoted_body(args[1])
+    if body is None:
+        # Column-valued pattern: Presto evaluates patterns per row
+        # (DateTimeFunctions.java) — route to the Arrow-batched Python
+        # renderer instead of silently falling through to java.time
+        # semantics.
+        return f"{name}_py({args[0]}, {args[1]})"
+    target, xlate = _DT_FORMAT_FNS[name]
+    raw = body.replace("''", "'")
+    cf = (_mysql_concat_form(args[0], raw) if name == "date_format"
+          else _joda_concat_form(args[0], raw)
+          if name == "format_datetime" else None)
+    if cf is not None:
+        return cf
+    if xlate is mysql_to_java and "%" not in raw:
+        # No %-specifiers: either already java.time (idempotent
+        # re-translate) or a degenerate all-literal pattern — leave it.
+        return None
+    try:
+        java = xlate(raw)
+    except UnsupportedPatternError:
+        return None
+    # The /*dt*/ marker (stripped by Spark's lexer) keeps the emitted
+    # java-pattern call out of the Teradata to_date/to_timestamp macros,
+    # whose format grammar overlaps java.time spellings ('mm' means
+    # month in Teradata, minute in java.time).
+    return f"{target}/*dt*/({args[0]}, '{java.replace(chr(39), chr(39) * 2)}')"
 
 
 # --- extended-JSONPath routing ---------------------------------------------
@@ -444,44 +355,18 @@ _EXTENDED_PATH = re.compile(
 )
 
 
-def _rewrite_jsonpath_calls(sql: str) -> str:
-    out = []
-    pos = 0
-    spans = _string_spans(sql)
-    while True:
-        m = _json_call_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        args, close = parsed
-        lit = _literal_re.match(args[-1].strip()) if len(args) == 2 else None
-        if lit is None and len(args) == 2:
-            # Column-valued path: Spark's get_json_object requires a
-            # foldable path, so this would fail loudly JVM-side — the
-            # Python JSONPath evaluator handles per-row paths.
-            out.append(sql[pos:m.start()])
-            out.append(f"{m.group(1).lower()}_py({args[0].strip()}, "
-                       f"{args[1].strip()})")
-            pos = close + 1
-            continue
-        if lit is None or not _EXTENDED_PATH.search(lit.group(1)):
-            out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        out.append(sql[pos:m.start()])
-        out.append(f"{m.group(1).lower()}_py({args[0].strip()}, "
-                   f"'{lit.group(1)}')")
-        pos = close + 1
-    return "".join(out)
+def _build_jsonpath_call(name: str, args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    body = quoted_body(args[1])
+    if body is None:
+        # Column-valued path: Spark's get_json_object requires a foldable
+        # path, so this would fail loudly JVM-side — the Python JSONPath
+        # evaluator handles per-row paths.
+        return f"{name}_py({args[0]}, {args[1]})"
+    if not _EXTENDED_PATH.search(body):
+        return None
+    return f"{name}_py({args[0]}, '{body}')"
 
 
 # --- polymorphic macro expansion -------------------------------------------
@@ -1086,46 +971,26 @@ _macro_call_re = re.compile(
 )
 
 # Presto ARRAY[...] literal constructor (SqlBase.g4 primaryExpression
-# ARRAY '[' ... ']') — Spark only parses array(...).  Stack-based scan:
-# '[' opened by the ARRAY keyword closes as ')', every other '[' (a
-# subscript) closes as ']'; string literals pass through untouched.
-_array_lit_re = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
+# ARRAY '[' ... ']') — Spark only parses array(...).  Stack-based scan
+# over the code brackets: '[' opened by the ARRAY keyword closes as ')',
+# every other '[' (a subscript) closes as ']'.
+_bracket_re = re.compile(r"\bARRAY\s*\[|[\[\]]", re.IGNORECASE)
 
 
 def _rewrite_array_literals(sql: str) -> str:
-    if _array_lit_re.search(sql) is None:
-        return sql
-    out: list[str] = []
+    out, pos = [], 0
     stack: list[bool] = []  # True = bracket opened by ARRAY keyword
-    in_str = False
-    i = 0
-    while i < len(sql):
-        c = sql[i]
-        if in_str:
-            out.append(c)
-            if c == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    out.append("'")
-                    i += 2
-                    continue
-                in_str = False
-        elif c == "'":
-            out.append(c)
-            in_str = True
-        elif (m := _array_lit_re.match(sql, i)) is not None:
-            out.append("array(")
-            stack.append(True)
-            i = m.end()
-            continue
-        elif c == "[":
-            out.append(c)
+    for m in lex(sql).finditer(_bracket_re):
+        if m.group() == "[":
             stack.append(False)
-        elif c == "]":
-            out.append(")" if stack and stack.pop() else "]")
-        else:
-            out.append(c)
-        i += 1
-    return "".join(out)
+        elif m.group() != "]":
+            stack.append(True)
+            out += (sql[pos:m.start()], "array(")
+            pos = m.end()
+        elif stack and stack.pop():
+            out += (sql[pos:m.start()], ")")
+            pos = m.end()
+    return "".join(out) + sql[pos:]
 
 
 # Integer subscripts whose base is a parenthesized expression — e.g.
@@ -1139,35 +1004,14 @@ _paren_subscript_re = re.compile(r"\)\s*\[(\d+)\]")
 
 def _rewrite_paren_subscripts(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = None
-        for cand in _paren_subscript_re.finditer(sql):
-            if not _in_string(spans, cand.start()):
-                m = cand
-                break
+        v = lex(sql)
+        m = next(v.finditer(_paren_subscript_re), None)
         if m is None:
             return sql
-        # Find the '(' matching the ')' at m.start(), skipping literals.
-        depth = 0
-        j = m.start()
-        while j >= 0:
-            if _in_string(spans, j):
-                j -= 1
-                continue
-            if sql[j] == ")":
-                depth += 1
-            elif sql[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
-        if j < 0:  # unbalanced — leave untouched
+        start, end = _scan_left_operand(v, m.start() + 1)
+        if start == end:  # unbalanced — leave untouched
             return sql
-        k = j - 1
-        while k >= 0 and (sql[k].isalnum() or sql[k] in "_."):
-            k -= 1
-        base = sql[k + 1:m.start() + 1]
-        sql = (sql[:k + 1] + f"element_at({base}, {m.group(1)})"
+        sql = (sql[:start] + f"element_at({sql[start:end]}, {m.group(1)})"
                + sql[m.end():])
 
 
@@ -1198,7 +1042,7 @@ def _type_to_spark(t: str) -> str:
         )
     kind, inner = m.group(1).upper(), m.group(2)
     parts = []
-    parsed = _split_call("(" + inner + ")", 0)
+    parsed = lex("(" + inner + ")").split_call(0)
     if parsed is not None:
         parts = parsed[0]
     if kind == "ARRAY":
@@ -1218,27 +1062,17 @@ def _type_to_spark(t: str) -> str:
 
 
 def _rewrite_type_positions(sql: str) -> str:
+    v = lex(sql)
     out, pos = [], 0
-    spans = _string_spans(sql)
-    while True:
-        m = _type_pos_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        _, close = parsed
-        out.append(sql[pos:m.start()])
-        out.append("AS " + _type_to_spark(sql[m.start() + 2:close + 1].strip()))
-        pos = close + 1
-    return "".join(out)
+    for m in v.finditer(_type_pos_re):
+        parsed = None if m.start() < pos else v.split_call(m.end() - 1)
+        if parsed is not None:
+            close = parsed[1]
+            out += (sql[pos:m.start()],
+                    "AS " + _type_to_spark(sql[m.start() + 2:close + 1]))
+            pos = close + 1
+    return "".join(out) + sql[pos:]
+
 
 # --- ANSI fetch/offset + typed literals + ROW constructor ----------------
 # FETCH FIRST n ROWS ONLY (SqlBase.g4 limit clause; Presto also allows
@@ -1258,29 +1092,23 @@ _fetch_first_re = re.compile(
 _offset_rows_re = re.compile(r"\bOFFSET\s+(\d+)\s+ROWS?\b", re.IGNORECASE)
 _typed_literal_re = re.compile(
     r"\b(DECIMAL|DOUBLE|REAL|BIGINT|INTEGER|SMALLINT|TINYINT|BOOLEAN"
-    r"|VARCHAR|CHAR|JSON)\s*('(?:[^']|'')*')", re.IGNORECASE)
+    r"|VARCHAR|CHAR|JSON)\s*", re.IGNORECASE)
 _row_ctor_re = re.compile(r"\bROW\s*\(", re.IGNORECASE)
 
 
-def _sub_skipping_strings(pat: re.Pattern, repl, sql: str) -> str:
-    """Like _sub_outside_strings, but for patterns whose MATCH itself
-    contains a string literal (e.g. DECIMAL '1.5') — the match must
-    merely START outside any literal."""
-    spans = _string_spans(sql)
+def _rewrite_typed_literals(sql: str) -> str:
+    v = lex(sql)
     out, pos = [], 0
-    for m in pat.finditer(sql):
-        if m.start() < pos or _in_string(spans, m.start()):
+    for m in v.finditer(_typed_literal_re):
+        lit = v.literal_at(m.end())
+        if lit is None or quoted_body(lit) is None:
             continue
-        out.append(sql[pos:m.start()])
-        out.append(repl(m) if callable(repl) else repl)
-        pos = m.end()
-    out.append(sql[pos:])
-    return "".join(out)
+        out += (sql[pos:m.start()], _typed_literal(m.group(1).upper(), lit))
+        pos = m.end() + len(lit)
+    return "".join(out) + sql[pos:]
 
 
-def _typed_literal_repl(m: re.Match) -> str:
-    t = m.group(1).upper()
-    lit = m.group(2)
+def _typed_literal(t: str, lit: str) -> str:
     if t in ("VARCHAR", "JSON"):
         return lit  # both are STRING in this engine's model
     if t == "CHAR":
@@ -1303,38 +1131,25 @@ def _typed_literal_repl(m: re.Match) -> str:
 # quotes identifiers AND function names with double quotes —
 # `"sum"("ss_ext_sales_price") "itemrevenue"`.  Spark's parser uses
 # backticks for identifiers and rejects quoted function names.
-# Rewrite every double-quoted token outside string literals: a quoted
-# name directly followed by '(' becomes the bare function name;
-# anything else becomes a backtick-quoted identifier ("" unescapes to
-# ", which backticks need no escape for).
-_dquote_ident_re = re.compile(r'"((?:[^"]|"")*)"')
-_btick_span_re = re.compile(r"`[^`]*`")
-
-
+# Rewrite every double-quoted identifier token: a quoted name directly
+# followed by '(' becomes the bare function name; anything else becomes
+# a backtick-quoted identifier ("" unescapes to ", a backtick doubles).
 def _rewrite_double_quoted_idents(sql: str) -> str:
-    # backtick spans are protected too: a prior pass may have produced
-    # `a"b` identifiers, and a " inside one must not anchor a match
-    # (idempotency)
-    spans = _string_spans(sql) + [
-        (m.start(), m.end()) for m in _btick_span_re.finditer(sql)
-    ]
-    out: list[str] = []
-    pos = 0
-    for m in _dquote_ident_re.finditer(sql):
-        if _in_string(spans, m.start()) or _in_string(spans, m.end() - 1):
+    out, pos = [], 0
+    for kind, s, e in lex(sql).tokens:
+        body = quoted_body(sql[s:e], '"') if kind == IDENT else None
+        if body is None:
             continue
-        out.append(sql[pos:m.start()])
-        name = m.group(1).replace('""', '"')
-        j = m.end()
+        name = body.replace('""', '"')
+        j = e
         while j < len(sql) and sql[j].isspace():
             j += 1
         if j < len(sql) and sql[j] == "(" and re.fullmatch(r"\w+", name):
-            out.append(name)
+            out += (sql[pos:s], name)
         else:
-            out.append(f"`{name}`")
-        pos = m.end()
-    out.append(sql[pos:])
-    return "".join(out)
+            out += (sql[pos:s], "`" + name.replace("`", "``") + "`")
+        pos = e
+    return "".join(out) + sql[pos:]
 
 
 # Window-function frame/order conformance (reference: WindowOperator +
@@ -1353,6 +1168,8 @@ _rankish_over_re = re.compile(
     r"\b(rank|dense_rank|percent_rank|cume_dist|row_number|ntile|lead|lag)"
     r"\s*\(", re.IGNORECASE)
 _frame_kw_re = re.compile(r"\b(ROWS|RANGE|GROUPS)\b", re.IGNORECASE)
+_over_tail_re = re.compile(
+    r"\s*(?:IGNORE\s+NULLS|RESPECT\s+NULLS)?\s*OVER\s*\(", re.IGNORECASE)
 _needs_order = frozenset((
     "rank", "dense_rank", "percent_rank", "cume_dist", "row_number",
     "ntile",
@@ -1361,36 +1178,26 @@ _needs_order = frozenset((
 
 def _rewrite_rankish_windows(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
+        v = lex(sql)
         changed = False
-        for m in _rankish_over_re.finditer(sql):
-            if _in_string(spans, m.start()):
-                continue
-            parsed = _split_call(sql, m.end() - 1)
+        for m in v.finditer(_rankish_over_re):
+            parsed = v.split_call(m.end() - 1)
             if parsed is None:
                 continue
-            _, close = parsed
-            j = close + 1
-            tail = re.match(
-                r"\s*(?:IGNORE\s+NULLS|RESPECT\s+NULLS)?\s*OVER\s*\(",
-                sql[j:], re.IGNORECASE)
+            tail = _over_tail_re.match(sql, parsed[1] + 1)
             if tail is None:
                 continue
-            gopen = j + tail.end() - 1
-            gparsed = _split_call(sql, gopen)
+            gopen = tail.end() - 1
+            gparsed = v.split_call(gopen)
             if gparsed is None:
                 continue
-            _, gclose = gparsed
+            gclose = gparsed[1]
             group = sql[gopen + 1:gclose]
             new_group = group
-            fm = next(
-                (f for f in _frame_kw_re.finditer(new_group)
-                 if _depth_at(new_group, f.start()) == 0), None)
-            if fm is not None:
-                new_group = new_group[:fm.start()].rstrip()
-            has_order = any(
-                _depth_at(new_group, o.start()) == 0
-                for o in _order_by_kw_re.finditer(new_group))
+            frame = lex(new_group).depth0(_frame_kw_re)
+            if frame:
+                new_group = new_group[:frame[0].start()].rstrip()
+            has_order = lex(new_group).depth0(_order_by_kw_re)
             if not has_order and m.group(1).lower() in _needs_order:
                 sep = " " if new_group.strip() else ""
                 new_group = new_group.rstrip() + sep + "ORDER BY 1"
@@ -1400,10 +1207,6 @@ def _rewrite_rankish_windows(sql: str) -> str:
                 break  # offsets shifted — rescan
         if not changed:
             return sql
-
-
-def _depth_at(s: str, i: int) -> int:
-    return s.count("(", 0, i) - s.count(")", 0, i)
 
 
 # Quantified comparisons (SqlBase.g4 quantifiedComparison; Presto
@@ -1417,52 +1220,48 @@ def _depth_at(s: str, i: int) -> int:
 # for ANY.
 _quantified_re = re.compile(
     r"(<=|>=|<>|!=|=|<|>)\s*(ANY|ALL|SOME)\s*\(", re.IGNORECASE)
+# Type words a literal operand keeps (TIMESTAMP '2020-01-01 00:00:00').
+_LITERAL_TYPES = frozenset(("date", "time", "timestamp"))
 
 
-def _scan_left_operand(sql: str, before: int,
-                       spans: list[tuple[int, int]]) -> tuple[int, int]:
+def _scan_left_operand(v, before: int) -> tuple[int, int]:
     """[start, end) of the value expression ending just before
     `before`: a call/paren group (with optional function name), a
-    string literal, or an identifier/number/dotted path."""
+    literal or quoted identifier (with its DATE/TIME/TIMESTAMP type
+    word, if any), or an identifier/number/dotted path.  An unbalanced
+    group gives an empty span."""
+    sql = v.sql
     i = before - 1
     while i >= 0 and sql[i].isspace():
         i -= 1
     end = i + 1
+    kind, s, _ = v.token_at(i)
+    if i >= 0 and kind not in (CODE, COMMENT):
+        i = s - 1
+        while i >= 0 and sql[i].isspace():
+            i -= 1
+        word = i
+        while word >= 0 and (sql[word].isalnum() or sql[word] == "_"):
+            word -= 1
+        return (word + 1 if sql[word + 1:i + 1].lower() in _LITERAL_TYPES
+                else s), end
     if i >= 0 and sql[i] == ")":
-        depth = 0
-        while i >= 0:
-            if _in_string(spans, i):
-                i -= 1
-                continue
-            if sql[i] == ")":
-                depth += 1
-            elif sql[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
-        i -= 1
-        while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-            i -= 1
-    elif i >= 0 and sql[i] == "'":
-        sp = next((s for s in spans if s[0] <= i < s[1]), None)
-        if sp is None:
+        i = v.match_open(i)
+        if i is None:
             return end, end
-        i = sp[0] - 1
-    else:
-        while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-            i -= 1
+        i -= 1
+    while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
+        i -= 1
     return i + 1, end
 
 
 def _rewrite_quantified_comparisons(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = next((c for c in _quantified_re.finditer(sql)
-                  if not _in_string(spans, c.start())), None)
+        v = lex(sql)
+        m = next(v.finditer(_quantified_re), None)
         if m is None:
             return sql
-        parsed = _split_call(sql, m.end() - 1)
+        parsed = v.split_call(m.end() - 1)
         if parsed is None:
             return sql
         _, close = parsed
@@ -1471,7 +1270,7 @@ def _rewrite_quantified_comparisons(sql: str) -> str:
         quant = m.group(2).upper()
         if quant == "SOME":
             quant = "ANY"
-        start, end = _scan_left_operand(sql, m.start(), spans)
+        start, end = _scan_left_operand(v, m.start())
         lhs = sql[start:end].strip()
         if not lhs:
             return sql
@@ -1529,13 +1328,12 @@ _in_values_re = re.compile(r"\bIN\s*\(\s*VALUES\b", re.IGNORECASE)
 
 def _rewrite_in_values(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = next((c for c in _in_values_re.finditer(sql)
-                  if not _in_string(spans, c.start())), None)
+        v = lex(sql)
+        m = next(v.finditer(_in_values_re), None)
         if m is None:
             return sql
         open_paren = sql.index("(", m.start())
-        parsed = _split_call(sql, open_paren)
+        parsed = v.split_call(open_paren)
         if parsed is None:
             return sql
         _, close = parsed
@@ -1559,107 +1357,79 @@ _sortlist_end_words = frozenset((
     "limit", "offset", "fetch", "rows", "range", "groups", "union",
     "intersect", "except", "having", "window",
 ))
-_ident_re = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# Tokens that can end a sort-item list: a paren, ';', ',' or a word.
+_sortlist_tok_re = re.compile(r"[(),;]|(?<!\w)[A-Za-z_][A-Za-z0-9_]*")
 
 
 def _rewrite_order_by_null_defaults(sql: str) -> str:
-    spans = _string_spans(sql)
-    out: list[str] = []
-    pos = 0
-    while True:
-        m = _order_by_kw_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
+    v = lex(sql)
+    out, pos = [], 0
+    for m in v.finditer(_order_by_kw_re):
+        if m.start() < pos:
             continue
-        out.append(sql[pos:m.end()])
         # scan the sort-item list: items split on top-level commas;
         # the list ends at an unbalanced ')' / ';' / a clause keyword.
-        i = m.end()
-        depth = 0
-        item_start = i
+        depth, item_start, end = 0, m.end(), len(sql)
         bounds: list[tuple[int, int]] = []
-        while i < len(sql):
-            if _in_string(spans, i):
-                i += 1
-                continue
-            ch = sql[i]
-            if ch == "(":
+        for t in v.finditer(_sortlist_tok_re, m.end()):
+            tok = t.group()
+            if tok == "(":
                 depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
+            elif tok == ")" and depth:
                 depth -= 1
-            elif ch == ";" and depth == 0:
+            elif depth == 0 and tok == ",":
+                bounds.append((item_start, t.start()))
+                item_start = t.end()
+            elif depth == 0 and (tok in ");"
+                                 or tok.lower() in _sortlist_end_words):
+                end = t.start()
                 break
-            elif ch == "," and depth == 0:
-                bounds.append((item_start, i))
-                item_start = i + 1
-            elif depth == 0 and (ch.isalpha() or ch == "_") and (
-                i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-            ):
-                w = _ident_re.match(sql, i)
-                if w and w.group(0).lower() in _sortlist_end_words:
-                    break
-                i = w.end() - 1 if w else i
-            i += 1
-        bounds.append((item_start, i))
-        for k, (a, b) in enumerate(bounds):
-            item = sql[a:b]
-            stripped = item.rstrip()
-            if stripped.strip() and not _nulls_dir_re.search(stripped):
-                item = stripped + " NULLS LAST" + item[len(stripped):]
-            out.append(item)
-            if k < len(bounds) - 1:
-                out.append(",")
-        pos = i
-    # unreachable
+        bounds.append((item_start, end))
+        out += (sql[pos:m.end()],
+                ",".join(_with_nulls_last(v, a, b) for a, b in bounds))
+        pos = end
+    return "".join(out) + sql[pos:]
+
+
+def _with_nulls_last(v, a: int, b: int) -> str:
+    """Sort item sql[a:b] with NULLS LAST after its last code, unless it
+    carries a NULLS directive; trailing blanks and comments stay after."""
+    item = v.sql[a:b]
+    cut = len(item.rstrip())
+    while cut and v.token_at(a + cut - 1)[0] == COMMENT:
+        cut = len(item[:max(v.token_at(a + cut - 1)[1] - a, 0)].rstrip())
+    if item[:cut].strip() and not _nulls_dir_re.search(item[:cut]):
+        return item[:cut] + " NULLS LAST" + item[cut:]
+    return item
 
 
 def _rewrite_limit_grammar(sql: str) -> str:
-    sql = _sub_outside_strings(
-        _offset_fetch_re,
-        lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}", sql)
-    sql = _sub_outside_strings(
-        _fetch_first_re, lambda m: f"LIMIT {m.group(1) or 1}", sql)
-    return _sub_outside_strings(
-        _offset_rows_re, lambda m: f"OFFSET {m.group(1)}", sql)
+    sql = lex(sql).sub(
+        _offset_fetch_re, lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}")
+    sql = lex(sql).sub(_fetch_first_re, lambda m: f"LIMIT {m.group(1) or 1}")
+    return lex(sql).sub(_offset_rows_re, lambda m: f"OFFSET {m.group(1)}")
 
 
-def _rewrite_calls(sql: str, call_re: re.Pattern, build) -> str:
-    """Generic top-level-call rewriter: for each call matching
-    ``call_re`` outside string literals, ``build(name, args)`` returns
-    replacement text or None to leave the call as written (its nested
-    calls are then still scanned)."""
-    out, pos = [], 0
-    spans = _string_spans(sql)
-    while True:
-        m = call_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
+def _rewrite_calls(sql: str, call_re: re.Pattern, build,
+                   descend: bool = True) -> str:
+    """Generic top-level-call rewriter: for each code call matching
+    ``call_re``, ``build(name, args)`` returns replacement text or None
+    to leave the call as written.  The arguments of a call left as
+    written are still scanned, unless ``descend`` is False."""
+    v = lex(sql)
+    out, pos, skip = [], 0, 0
+    for m in v.finditer(call_re):
+        parsed = None if m.start() < skip else v.split_call(m.end() - 1)
         if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
             continue
         args, close = parsed
         repl = build(m.group(1).lower(), [a.strip() for a in args])
-        if repl is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        out.append(sql[pos:m.start()])
-        out.append(repl)
-        pos = close + 1
-    return "".join(out)
+        if repl is not None:
+            out += (sql[pos:m.start()], repl)
+            pos = close + 1
+        if repl is not None or not descend:
+            skip = close + 1
+    return "".join(out) + sql[pos:]
 
 
 # approx_distinct → approx_count_distinct carrying Presto's DEFAULT
@@ -1768,12 +1538,10 @@ _agg_tail_re = re.compile(
 
 def _rewrite_array_agg(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
+        v = lex(sql)
         hit = None
-        for m in _array_agg_re.finditer(sql):
-            if _in_string(spans, m.start()):
-                continue
-            parsed = _split_call(sql, m.end() - 1)
+        for m in v.finditer(_array_agg_re):
+            parsed = v.split_call(m.end() - 1)
             if parsed is None:
                 continue
             args, close = parsed
@@ -1793,7 +1561,7 @@ def _rewrite_array_agg(sql: str) -> str:
             t = _agg_tail_re.match(sql, end)
             if t is None:
                 break
-            p = _split_call(sql, t.end() - 1)
+            p = v.split_call(t.end() - 1)
             if p is None:
                 break
             tail += sql[end:p[1] + 1]
@@ -1819,13 +1587,28 @@ def _build_count(_name: str, args: list[str]) -> str | None:
 # UNICODE_STRING; Presto docs language/types.rst): the escape
 # character introduces a 4-hex-digit code point, or a 6-digit one
 # with a '+'; a doubled escape character is the literal character.
-_unicode_str_re = re.compile(
-    r"U&('(?:[^']|'')*')(?:\s+UESCAPE\s+'(.)')?", re.IGNORECASE)
+_uescape_re = re.compile(r"\s+UESCAPE\s+", re.IGNORECASE)
 
 
-def _decode_unicode_literal(m: re.Match) -> str:
-    body = m.group(1)[1:-1]
-    esc = m.group(2) or "\\"
+def _decode_unicode_literals(sql: str) -> str:
+    v = lex(sql)
+    out, pos = [], 0
+    for kind, s, e in v.tokens:
+        body = (quoted_body(sql[s + 2:e])
+                if kind == STRING and sql[s:s + 2].upper() == "U&" else None)
+        if s < pos or body is None:
+            continue
+        esc, end = "\\", e
+        uesc = _uescape_re.match(sql, e)
+        lit = uesc and v.literal_at(uesc.end())
+        if lit and len(quoted_body(lit) or "") == 1:
+            esc, end = lit[1], uesc.end() + len(lit)
+        out += (sql[pos:s], _decode_unicode_literal(body, esc))
+        pos = end
+    return "".join(out) + sql[pos:]
+
+
+def _decode_unicode_literal(body: str, esc: str) -> str:
     out, i = [], 0
     while i < len(body):
         c = body[i]
@@ -1954,10 +1737,10 @@ def _build_split(_name: str, args: list[str]) -> str | None:
         return None
     if len(args) == 3 and args[2] == "-1":
         return None  # regexp_split marker — the pattern is a real regex
-    lit = _literal_re.match(args[1])
-    if lit is None:
+    body = quoted_body(args[1])
+    if body is None:
         return None
-    raw = lit.group(1).replace("''", "'")
+    raw = body.replace("''", "'")
     if "\\" in raw or not any(c in _REGEX_SPECIAL for c in raw):
         return None
     sql_body = ("\\Q" + raw + "\\E").replace("\\", "\\\\").replace("'", "''")
@@ -1980,63 +1763,20 @@ _at_tz_re = re.compile(r"\bAT\s+TIME\s+ZONE\b", re.IGNORECASE)
 
 def _rewrite_at_time_zone(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = next((c for c in _at_tz_re.finditer(sql)
-                  if not _in_string(spans, c.start())), None)
+        v = lex(sql)
+        m = next(v.finditer(_at_tz_re), None)
         if m is None:
             return sql
-        i = m.start() - 1
-        while i >= 0 and sql[i].isspace():
-            i -= 1
-        end_l = i + 1
-        if i >= 0 and sql[i] == ")":
-            depth = 0
-            while i >= 0:
-                if _in_string(spans, i):
-                    i -= 1
-                    continue
-                if sql[i] == ")":
-                    depth += 1
-                elif sql[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i -= 1
-            i -= 1
-            while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-                i -= 1
-        elif i >= 0 and sql[i] == "'":
-            sp = next((s for s in spans if s[0] <= i < s[1]), None)
-            if sp is None:
-                return sql
-            i = sp[0] - 1
-            while i >= 0 and sql[i].isspace():
-                i -= 1
-            while i >= 0 and (sql[i].isalnum() or sql[i] == "_"):
-                i -= 1
-        else:
-            while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-                i -= 1
-        start_l = i + 1
+        start_l, end_l = _scan_left_operand(v, m.start())
         left = sql[start_l:end_l].strip()
         j = m.end()
         while j < len(sql) and sql[j].isspace():
             j += 1
-        if j < len(sql) and sql[j] == "'":
-            k = j + 1
-            while k < len(sql):
-                if sql[k] == "'":
-                    if k + 1 < len(sql) and sql[k + 1] == "'":
-                        k += 2
-                        continue
-                    break
-                k += 1
-            end_r = k + 1
-        else:
-            k = j
-            while k < len(sql) and (sql[k].isalnum() or sql[k] in "_."):
-                k += 1
-            end_r = k
+        end_r = j + len(v.literal_at(j) or "")
+        if end_r == j:
+            while end_r < len(sql) and (
+                    sql[end_r].isalnum() or sql[end_r] in "_."):
+                end_r += 1
         if not left or end_r == j:
             return sql
         sql = (sql[:start_l] + f"tswtz({left}, {sql[j:end_r]})"
@@ -2099,7 +1839,7 @@ def _unnest_arg_specs(args: list[str]) -> list[tuple[str, str, int]]:
         # arrive as array(struct(...)); accept the raw spelling too
         rm = re.match(r"(?is)^\s*ARRAY\s*[\[(]\s*struct\s*\(", a)
         if rm:
-            parsed = _split_call(a, rm.end() - 1)
+            parsed = lex(a).split_call(rm.end() - 1)
             specs.append((a, "rowarray", len(parsed[0]) if parsed else 1))
             continue
         specs.append((a, "array", 1))
@@ -2157,18 +1897,12 @@ def _unnest_inner_select(args: list[str], cols: list[str], ordinal: bool) -> str
 
 
 def _rewrite_unnest(sql: str) -> str:
+    v = lex(sql)
     out, pos = [], 0
-    spans = _string_spans(sql)
-    while True:
-        m = _unnest_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        parsed = None if _in_string(spans, m.start()) else _split_call(sql, m.end() - 1)
+    for m in v.finditer(_unnest_re):
+        parsed = None if m.start() < pos else v.split_call(m.end() - 1)
         tail = parsed and _unnest_tail_re.match(sql, parsed[1] + 1)
         if not tail:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
             continue
         args = [a.strip() for a in parsed[0]]
         alias = tail.group(2) or "_ps_unnest"
@@ -2183,15 +1917,9 @@ def _rewrite_unnest(sql: str) -> str:
             if tail.group(1):
                 cols.append("ordinality")
         inner = _unnest_inner_select(args, cols, tail.group(1) is not None)
-        if inner is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
         prefix = sql[pos:m.start()]
-        pm = _unnest_prefix_re.search(prefix)
-        if pm is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
+        pm = inner and _unnest_prefix_re.search(prefix)
+        if not pm:
             continue
         kind = pm.group(1).strip().upper()
         if kind == "FROM":
@@ -2201,7 +1929,7 @@ def _rewrite_unnest(sql: str) -> str:
             out.append(prefix[:pm.start(1)] + ", LATERAL ")
             out.append(f"({inner}) {alias}")
         pos = tail.end()
-    return "".join(out)
+    return "".join(out) + sql[pos:]
 
 
 # General TRY(expr) (reference: TryFunction.java).  TRY(CAST(..)) is
@@ -2213,7 +1941,7 @@ def _rewrite_unnest(sql: str) -> str:
 _TRY_OPS = [("+", "try_add"), ("-", "try_subtract"),
             ("*", "try_multiply"), ("/", "try_divide"), ("%", "try_mod")]
 
-_try_call_re = re.compile(r"\bTRY\s*\(", re.IGNORECASE)
+_try_call_re = re.compile(r"\b(TRY)\s*\(", re.IGNORECASE)
 
 
 def _split_top_binary(expr: str):
@@ -2221,116 +1949,71 @@ def _split_top_binary(expr: str):
     operator, or None.  '[' counts as nesting: ops inside a subscript or
     ARRAY[...] literal are not top-level."""
     depth = 0
-    in_str = False
     add_idx = mul_idx = None
     prev = ""
-    for i, c in enumerate(expr):
-        if in_str:
-            if c == "'":
-                in_str = False
+    for kind, s, e in lex(expr).tokens:
+        if kind != CODE:
+            if kind != COMMENT:
+                prev = "'"  # a literal or quoted name is an operand
             continue
-        if c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in "<>=!":
-            # a top-level COMPARISON binds looser than any arithmetic
-            # op: TRY(1 / x != 1000) must unwrap whole, never become
-            # try_divide(1, x != 1000)
-            return None
-        elif depth == 0 and c in "+-*/%":
-            is_unary = c in "+-" and (prev == "" or prev in "(,+-*/%<>=")
-            if not is_unary:
-                if c in "+-":
-                    add_idx = i
-                else:
-                    mul_idx = i
-        if not c.isspace():
-            prev = c
+        for i in range(s, e):
+            c = expr[i]
+            if c in "([":
+                depth += 1
+            elif c in ")]":
+                depth -= 1
+            elif depth == 0 and c in "<>=!":
+                # a top-level COMPARISON binds looser than any arithmetic
+                # op: TRY(1 / x != 1000) must unwrap whole, never become
+                # try_divide(1, x != 1000)
+                return None
+            elif depth == 0 and c in "+-*/%":
+                is_unary = c in "+-" and (prev == "" or prev in "(,+-*/%<>=")
+                if not is_unary:
+                    if c in "+-":
+                        add_idx = i
+                    else:
+                        mul_idx = i
+            if not c.isspace():
+                prev = c
     idx = add_idx if add_idx is not None else mul_idx
     if idx is None:
         return None
     return expr[:idx].strip(), expr[idx], expr[idx + 1:].strip()
 
 
+def _build_macro(name: str, args: list[str]) -> str | None:
+    # (nargs, build) tuple, or {nargs: build} for overloaded arities
+    # (regexp_extract 2- and 3-arg forms); a builder may decline (None)
+    # — e.g. when it sees its own re-trigger marker, keeping translate()
+    # idempotent
+    entry = _MACROS[name]
+    if isinstance(entry, dict):
+        build = entry.get(len(args))
+    else:
+        nargs, build = entry
+        if len(args) != nargs:
+            build = None
+    return None if build is None else build(args)
+
+
+def _build_try(_name: str, args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    split = _split_top_binary(args[0])
+    if split is None:
+        return f"({args[0]})"
+    lhs, op, rhs = split
+    return f"{dict(_TRY_OPS)[op]}({lhs}, {rhs})"
+
+
 def _expand_macros_and_try(sql: str) -> str:
-    changed = True
-    guard = 0
-    while changed and guard < 10:
-        changed = False
-        guard += 1
-        # macro calls
-        out = []
-        pos = 0
-        spans = _string_spans(sql)
-        while True:
-            m = _macro_call_re.search(sql, pos)
-            if m is None:
-                out.append(sql[pos:])
-                break
-            if _in_string(spans, m.start()):
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            parsed = _split_call(sql, m.end() - 1)
-            entry = _MACROS[m.group(1).lower()]
-            # (nargs, build) tuple, or {nargs: build} for overloaded
-            # arities (regexp_extract 2- and 3-arg forms)
-            if isinstance(entry, dict):
-                build = None if parsed is None else entry.get(
-                    len(parsed[0]))
-            else:
-                nargs, build = entry
-                if parsed is not None and len(parsed[0]) != nargs:
-                    build = None
-            expansion = None
-            if parsed is not None and build is not None:
-                # a builder may decline (None) — e.g. when it sees its
-                # own re-trigger marker, keeping translate() idempotent
-                expansion = build([a.strip() for a in parsed[0]])
-            if expansion is None:
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            args, close = parsed
-            out.append(sql[pos:m.start()])
-            out.append(expansion)
-            pos = close + 1
-            changed = True
-        sql = "".join(out)
-        # general TRY(expr)
-        out = []
-        pos = 0
-        spans = _string_spans(sql)
-        while True:
-            m = _try_call_re.search(sql, pos)
-            if m is None:
-                out.append(sql[pos:])
-                break
-            if _in_string(spans, m.start()):
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            parsed = _split_call(sql, m.end() - 1)
-            if parsed is None or len(parsed[0]) != 1:
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            args, close = parsed
-            inner = args[0].strip()
-            split = _split_top_binary(inner)
-            out.append(sql[pos:m.start()])
-            if split is not None:
-                lhs, op, rhs = split
-                fn = dict(_TRY_OPS)[op]
-                out.append(f"{fn}({lhs}, {rhs})")
-            else:
-                out.append(f"({inner})")
-            pos = close + 1
-            changed = True
-        sql = "".join(out)
+    for _ in range(10):
+        out = _rewrite_calls(sql, _macro_call_re, _build_macro)
+        out = _rewrite_calls(out, _try_call_re, _build_try)
+        if out == sql:
+            break
+        sql = out
     return sql
 
 
@@ -2365,66 +2048,25 @@ _groups_frame_re = re.compile(
 )
 
 
-def _matching_paren(sql: str, open_i: int, spans) -> int | None:
-    depth = 0
-    i = open_i
-    n = len(sql)
-    while i < n:
-        if _in_string(spans, i):
-            i += 1
-            continue
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return None
-
-
-def _depth0_keyword_spans(sql: str, word_pattern: str):
-    """(start, end) of each match of ``word_pattern`` at paren depth 0,
-    outside string literals."""
-    spans = _string_spans(sql)
-    depth = 0
-    depths = []
-    for i, c in enumerate(sql):
-        depths.append(depth)
-        if _in_string(spans, i):
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-    rx = re.compile(word_pattern, re.IGNORECASE)
-    return [
-        (m.start(), m.end())
-        for m in rx.finditer(sql)
-        if not _in_string(spans, m.start()) and depths[m.start()] == 0
-    ]
+_select_kw_re = re.compile(r"\bSELECT\b", re.IGNORECASE)
+_from_kw_re = re.compile(r"\bFROM\b", re.IGNORECASE)
+_grouped_kw_re = re.compile(r"\bGROUP\s+BY\b|\bHAVING\b", re.IGNORECASE)
+_tail_kw_re = re.compile(r"\bORDER\s+BY\b|\bLIMIT\b", re.IGNORECASE)
 
 
 def _rewrite_groups_frames(sql: str) -> str:
     if not _groups_kw_re.search(sql):
         return sql
-    spans = _string_spans(sql)
+    v = lex(sql)
     sigs: dict[tuple[str, str], tuple[str, str, str]] = {}
     repls: list[tuple[int, int, str]] = []
     pos = 0
-    while True:
-        m = _over_open_re.search(sql, pos)
-        if m is None:
-            break
-        if _in_string(spans, m.start()):
-            pos = m.end()
-            continue
+    for m in v.finditer(_over_open_re):
         open_i = m.end() - 1
-        close_i = _matching_paren(sql, open_i, spans)
-        if close_i is None:
-            pos = m.end()
+        parsed = None if m.start() < pos else v.split_call(open_i)
+        if parsed is None:
             continue
+        close_i = parsed[1]
         content = sql[open_i + 1:close_i]
         pos = close_i
         gm = _groups_clause_re.match(content)
@@ -2453,20 +2095,16 @@ def _rewrite_groups_frames(sql: str) -> str:
     for start, end, text in reversed(repls):
         out = out[:start] + text + out[end:]
     # Wrap the single top-level SELECT's FROM with the dense_rank source.
-    selects = _depth0_keyword_spans(out, r"\bSELECT\b")
+    w = lex(out)
+    selects = w.depth0(_select_kw_re)
     if len(selects) != 1:
         return sql
-    froms = [s for s in _depth0_keyword_spans(out, r"\bFROM\b")
-             if s[0] > selects[0][1]]
-    if not froms:
+    froms = [f for f in w.depth0(_from_kw_re) if f.start() > selects[0].end()]
+    if not froms or w.depth0(_grouped_kw_re):
         return sql
-    if _depth0_keyword_spans(out, r"\bGROUP\s+BY\b|\bHAVING\b"):
-        return sql
-    from_s, from_e = froms[0]
-    tails = [s for s in
-             _depth0_keyword_spans(out, r"\bORDER\s+BY\b|\bLIMIT\b")
-             if s[0] > from_e]
-    tail_at = tails[0][0] if tails else len(out)
+    from_s, from_e = froms[0].span()
+    tails = [t for t in w.depth0(_tail_kw_re) if t.start() > from_e]
+    tail_at = tails[0].start() if tails else len(out)
     body = out[from_e:tail_at].strip()
     dr_cols = ", ".join(
         f"dense_rank() OVER ("
@@ -2483,7 +2121,7 @@ def _rewrite_groups_frames(sql: str) -> str:
 
 def translate(sql: str) -> str:
     """Rewrite Presto spellings to Spark spellings.  Idempotent."""
-    out = _sub_skipping_strings(_unicode_str_re, _decode_unicode_literal, sql)
+    out = _decode_unicode_literals(sql)
     out = _rewrite_double_quoted_idents(out)
     out = _rewrite_quantified_comparisons(out)
     out = _rewrite_rankish_windows(out)
@@ -2491,10 +2129,10 @@ def translate(sql: str) -> str:
     out = _rewrite_order_by_null_defaults(out)
     out = _rewrite_array_literals(out)
     out = _rewrite_type_positions(out)
-    out = _sub_outside_strings(_bare_varchar_re, "AS STRING", out)
-    out = _sub_outside_strings(_bare_varbinary_re, "AS BINARY", out)
-    out = _sub_skipping_strings(_typed_literal_re, _typed_literal_repl, out)
-    out = _sub_outside_strings(_row_ctor_re, "struct(", out)
+    out = lex(out).sub(_bare_varchar_re, "AS STRING")
+    out = lex(out).sub(_bare_varbinary_re, "AS BINARY")
+    out = _rewrite_typed_literals(out)
+    out = lex(out).sub(_row_ctor_re, "struct(")
     out = _rewrite_limit_grammar(out)
     out = _rewrite_at_time_zone(out)
     out = _rewrite_unnest(out)
@@ -2515,17 +2153,17 @@ def translate(sql: str) -> str:
     # Literal split delimiters quote BEFORE the regexp_split→split
     # rename below, so a renamed regexp_split's pattern is never quoted.
     out = _rewrite_calls(out, _split_call_name_re, _build_split)
-    out = _sub_outside_strings(
-        _tablesample_re, lambda m: f"TABLESAMPLE ({m.group(1)} PERCENT)", out
-    )
-    out = _rewrite_datetime_formats(out)
-    out = _rewrite_jsonpath_calls(out)
-    out = _sub_outside_strings(
-        _simple_renames_re,
-        lambda m: _SIMPLE_MAP[m.group(1).lower()] + "(", out,
-    )
-    out = _sub_outside_strings(_SUBSCRIPT_RULE[0], _SUBSCRIPT_RULE[1], out)
+    out = lex(out).sub(
+        _tablesample_re, lambda m: f"TABLESAMPLE ({m.group(1)} PERCENT)")
+    out = _rewrite_calls(out, _dt_call_re, _build_datetime_format,
+                         descend=False)
+    out = _rewrite_calls(out, _json_call_re, _build_jsonpath_call,
+                         descend=False)
+    out = lex(out).sub(
+        _simple_renames_re, lambda m: _SIMPLE_MAP[m.group(1).lower()] + "(")
+    out = lex(out).sub(*_SUBSCRIPT_RULE)
     out = _rewrite_paren_subscripts(out)
+    out = _rewrite_date_units(out)
     for pat, repl in _PATTERN_RULES:
-        out = pat.sub(repl, out)  # type: ignore[arg-type]
+        out = lex(out).sub(pat, repl)
     return _expand_macros_and_try(out)

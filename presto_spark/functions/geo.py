@@ -833,18 +833,6 @@ def great_circle_distance(
 
 # ---- linear referencing (GeoFunctions.java:444-489) ----------------------
 
-def _seg_lengths(ring: Column):
-    a, b = _edges(ring)
-    return F.zip_with(
-        a,
-        b,
-        lambda p, q: F.sqrt(
-            (q["x"] - p["x"]) * (q["x"] - p["x"])
-            + (q["y"] - p["y"]) * (q["y"] - p["y"])
-        ),
-    )
-
-
 _SEG_ENTRY_T = (
     "array<struct<p:struct<x:double,y:double>,"
     "q:struct<x:double,y:double>,len:double,before:double>>"
@@ -1116,18 +1104,6 @@ def st_num_interior_ring(geom: Column) -> Column:
     )
 
 
-def st_exterior_ring(geom: Column) -> Column:
-    """ST_ExteriorRing (GeoFunctions.java:975): the shell as a
-    LINESTRING."""
-    return F.when(
-        geom["kind"] == "POLYGON",
-        F.struct(
-            F.lit("LINESTRING").alias("kind"),
-            F.array(geom["rings"][0]).alias("rings"),
-        ),
-    )
-
-
 _GEOM_DDL = ("struct<kind:string,"
              "rings:array<array<struct<x:double,y:double>>>>")
 
@@ -1360,16 +1336,6 @@ def st_geometry_n(geom: Column, n: Column) -> Column:
                        piece_rings.alias("rings")))
         .otherwise(geom)
     )
-
-
-def st_is_empty(geom: Column) -> Column:
-    """ST_IsEmpty (GeoFunctions.java:375)."""
-    return F.size(F.flatten(geom["rings"])) == 0
-
-
-def st_coord_dim(geom: Column) -> Column:
-    """ST_CoordDim (GeoFunctions.java:339): always 2 here (no Z/M)."""
-    return F.when(geom["kind"].isNotNull(), F.lit(2).cast("int"))
 
 
 def st_dimension(geom: Column) -> Column:

@@ -523,19 +523,6 @@ def triangulate_raw(geom: Column) -> Column:
     )
 
 
-def triangles_of(raw: Column) -> Column:
-    """Flat triangle list → array of open CCW triangle rings
-    (array<array<struct<x,y>>>), the struct-geometry view."""
-    return F.transform(
-        raw,
-        lambda t: F.array(
-            F.struct(t[0].alias("x"), t[1].alias("y")),
-            F.struct(t[2].alias("x"), t[3].alias("y")),
-            F.struct(t[4].alias("x"), t[5].alias("y")),
-        ),
-    )
-
-
 def geometry_from_flat_pieces(flat: Column) -> Column:
     """Flat piece list ([x1,y1,x2,y2,...] per piece) → POLYGON (one
     piece) / MULTIPOLYGON (several) / NULL (empty)."""

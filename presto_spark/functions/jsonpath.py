@@ -131,10 +131,6 @@ def tokenize(path: str) -> tuple[tuple, ...]:
     return tuple(toks)
 
 
-def is_indefinite(path: str) -> bool:
-    return any(t[0] in _INDEFINITE for t in tokenize(path))
-
-
 def _descend(node, name, out):
     if isinstance(node, dict):
         for k, v in node.items():

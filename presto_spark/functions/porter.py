@@ -64,16 +64,6 @@ def _ends_cvc(w: str) -> bool:
     )
 
 
-def _replace(w: str, suffix: str, repl: str, m_min: int) -> str | None:
-    """If w ends with suffix and measure(stem) > m_min, replace it."""
-    if not w.endswith(suffix):
-        return None
-    stem = w[: len(w) - len(suffix)]
-    if _measure(stem) > m_min:
-        return stem + repl
-    return w  # suffix matched but condition failed — stop this step
-
-
 def _step1ab(w: str) -> str:
     if w.endswith("sses"):
         w = w[:-2]

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import re
 
+from presto_spark.sql_lexer import quoted_body
+
 # token -> (format-mode Java pattern, parse-mode Java pattern)
 _TOKENS: list[tuple[str, str, str]] = [
     ("yyyy", "yyyy", "yyyy"),
@@ -74,11 +76,8 @@ def teradata_format_to_java(fmt: str, mode: str) -> str:
     return "".join(out)
 
 
-_LITERAL_RE = re.compile(r"^\s*'((?:[^']|'')*)'\s*$")
-
-
 def is_literal_format(arg_text: str) -> bool:
-    return _LITERAL_RE.match(arg_text) is not None
+    return quoted_body(arg_text.strip()) is not None
 
 
 def literal_format_to_java(arg_text: str, mode: str) -> str:
@@ -86,12 +85,12 @@ def literal_format_to_java(arg_text: str, mode: str) -> str:
     format string (the reference compiles formats per call site too —
     a DateTimeFormatter cache keyed by the literal), convert, and
     re-quote for splicing into Spark SQL."""
-    m = _LITERAL_RE.match(arg_text)
-    if m is None:
+    body = quoted_body(arg_text.strip())
+    if body is None:
         raise ValueError(
             "Teradata to_char/to_date/to_timestamp require a literal "
             f"format string; got: {arg_text!r}"
         )
-    fmt = m.group(1).replace("''", "'")
+    fmt = body.replace("''", "'")
     java = teradata_format_to_java(fmt, mode)
     return "'" + java.replace("'", "''") + "'"

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SUM_DEC = "decimal(30,10)"
@@ -48,7 +48,7 @@ def _np_dists(X, C):
     order: per (row, centroid) the fold is acc + (x_j - c_j)^2 in dim
     order, left to right — a dim loop of vectorized float64 ops issues
     the identical IEEE add sequence per cell, so every distance is
-    bit-equal to the Column-fold form (_sq_dist/_best_struct) and to
+    bit-equal to a Column fold of the same terms and to
     the DuckDB list_reduce replay.  The r15 optimization-round change
     (guide §4.2): the interpreted-HOF fold cost ~µs per (row,
     centroid, dim) element; this runs the same arithmetic through
@@ -84,62 +84,6 @@ def _np_mat(col) -> "object":
     import numpy as np
 
     return np.array([np.asarray(v, dtype=np.float64) for v in col])
-
-
-def _sq_dist(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance to a constant centroid — zip with the
-    literal bank + one left-to-right fold.  The lambda form keeps the
-    expression tree shallow (dim literal leaves, O(1) operator nodes),
-    where an unrolled (v[j]-c_j)^2 chain cost seconds of Catalyst
-    analysis per training round at k x dim terms."""
-    bank = F.array(*[F.lit(float(c)) for c in centroid])
-    return F.aggregate(
-        F.zip_with(vec, bank, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
-def _best_struct(vec: Column, centroids: list[list[float]]) -> Column:
-    """STRUCT(dist, cid) of the nearest centroid: array_min over
-    (dist, cid) structs — lowest cid wins exact ties.
-
-    Shape: ONE indexed transform over a nested bank literal, so the
-    expression holds a single copy of the distance fold (O(1)
-    operator nodes + k·dim literal leaves) instead of k unrolled
-    copies — the same node-count discipline as _sq_dist's lambda
-    form, applied across the bank dimension.  Every Lloyd round
-    analyzes and codegens a fresh plan with new centroid literals, so
-    expression size is pure per-round overhead.  Arithmetic and
-    tie-break are bit-identical to the unrolled form."""
-    bank = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in centroids
-    ])
-    return F.array_min(
-        F.transform(
-            bank,
-            lambda c, i: F.struct(
-                F.aggregate(
-                    F.zip_with(vec, c, lambda x, cc: (x - cc) * (x - cc)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("dist"),
-                i.alias("cid"),
-            ),
-        )
-    )
-
-
-def assign_clusters(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Attach ``cluster_id`` = argmin squared-L2 over the centroid
-    bank (lowest id wins ties — deterministic).  Map-side only."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.withColumn(
-        "cluster_id", _best_struct(v, centroids)["cid"].cast("int"))
 
 
 def _assign_components(

@@ -257,15 +257,6 @@ def learn_libsvm_classifier(df: DataFrame, label_col: str,
     return _stamp_params(out, params)
 
 
-def learn_libsvm_varchar_classifier(df: DataFrame, label_col: str,
-                                    features_col: str,
-                                    params: str = "") -> DataFrame:
-    """learn_libsvm_classifier(label varchar, features, params)
-    (LearnLibSvmVarcharClassifierAggregation.java)."""
-    out = _learn(df, label_col, features_col, "varchar")
-    return _stamp_params(out, params)
-
-
 def learn_libsvm_regressor(df: DataFrame, label_col: str,
                            features_col: str,
                            params: str = "") -> DataFrame:

@@ -105,17 +105,3 @@ def groups_frame(
         out = out.withColumn(name, agg.over(frame))
     return out.drop("__dr")
 
-
-def sample_bernoulli(df: DataFrame, fraction: float, seed: int | None = None) -> DataFrame:
-    """TABLESAMPLE BERNOULLI (SampleNode.java:33) — per-row coin flip."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """IN/EXISTS (HashSemiJoinOperator.java:198)."""
-    return left.join(right, on=on, how="left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """NOT IN/NOT EXISTS (null-safe NOT EXISTS semantics)."""
-    return left.join(right, on=on, how="left_anti")

@@ -277,6 +277,16 @@ def test_splice_sentinels_single_pass_unit():
     assert out == "SELECT ('__ps_param_1__') AS a, ('plain') AS b"
 
 
+def test_prepared_scanners_skip_comments_and_quoted_identifiers():
+    """Parameter and argument scanning read the text through the SQL
+    lexer: a '?' or ',' inside a comment or quoted identifier is text."""
+    from presto_spark import prepared as _prep
+    assert _prep.param_positions("SELECT /* ? */ 1 + ? FROM t") == [19]
+    assert _prep.param_positions("SELECT `?`, ? -- ?\nFROM t") == [12]
+    assert _prep.split_args('"a,b", 2') == ['"a,b"', "2"]
+    assert _prep.split_args("`a,b`, /* x, y */ 2") == ["`a,b`", "/* x, y */ 2"]
+
+
 def test_prepare_sentinel_shaped_statement_rejected(eng):
     """Pre-existing sentinel-shaped text in a prepared statement is
     rejected up front instead of being clobbered by the splice."""
@@ -299,3 +309,24 @@ def test_corpus_row_restores_shared_catalog(spark):
         "SELECT n_name FROM nation ORDER BY n_nationkey LIMIT 1"
     ).collect()[0].n_name
     assert first == "NATION_0"
+
+
+def test_driver_session_configure_matches_get_spark(spark):
+    """get_spark and the driver entry point's _configure read one
+    semantic-conf table: a fresh driver session passed through
+    _configure reports the engine session's value for every key."""
+    import importlib.util
+    import pathlib
+
+    from presto_spark.session import SEMANTIC_CONF
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("_driver_entry", path)
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    driver = spark.newSession()
+    for key in SEMANTIC_CONF:
+        driver.conf.unset(key)
+    entry._configure(driver)
+    assert {k: driver.conf.get(k) for k in SEMANTIC_CONF} == \
+        {k: spark.conf.get(k) for k in SEMANTIC_CONF} == SEMANTIC_CONF

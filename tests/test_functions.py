@@ -37,6 +37,65 @@ def test_dialect_translate_renames():
         "SELECT size(arr), any_value(y) FROM t"
 
 
+# Every rewrite reads the text through the one SQL lexer: string
+# literals, comments and quoted identifiers are never rewritten, and an
+# apostrophe inside a comment or identifier cannot open a literal.
+@pytest.mark.parametrize("sql, expected", [
+    pytest.param(
+        "SELECT cardinality(a) -- don't\n"
+        "FROM t WHERE s = 'cardinality(x)' AND b = 'a[1]'",
+        "SELECT size(a) -- don't\n"
+        "FROM t WHERE s = 'cardinality(x)' AND b = 'a[1]'",
+        id="apostrophe-in-line-comment"),
+    pytest.param(
+        "SELECT TRY(1/0) -- it's\n, 'TRY(x)' FROM t",
+        "SELECT try_divide(1, 0) -- it's\n, 'TRY(x)' FROM t",
+        id="try-literal-after-comment"),
+    pytest.param(
+        "SELECT bitwise_and(1,2), 'bitwise_and(3,4)' FROM t",
+        "SELECT bit_and_scalar(1,2), 'bitwise_and(3,4)' FROM t",
+        id="pattern-rule-in-literal"),
+    pytest.param('SELECT "cardinality(" FROM t',
+                 "SELECT `cardinality(` FROM t", id="double-quoted-ident"),
+    pytest.param("SELECT `a[1]` FROM t", "SELECT `a[1]` FROM t",
+                 id="backtick-ident"),
+    pytest.param("SELECT /* zip(a,b) */ x FROM t",
+                 "SELECT /* zip(a,b) */ x FROM t", id="block-comment"),
+    pytest.param("SELECT x /* don't */, 'ARRAY[1]' FROM t",
+                 "SELECT x /* don't */, 'ARRAY[1]' FROM t",
+                 id="apostrophe-in-block-comment"),
+    pytest.param("SELECT date_add('day', 1, ts) -- date_add('hour', 2, ts)\n"
+                 "FROM t",
+                 "SELECT timestampadd(DAY, 1, ts) -- date_add('hour', 2, ts)\n"
+                 "FROM t", id="date-unit-in-comment"),
+    pytest.param("SELECT 1 /* U&'\\0041' */", "SELECT 1 /* U&'\\0041' */",
+                 id="unicode-literal-in-comment"),
+    pytest.param("SELECT x FROM t ORDER BY x -- latest first\n",
+                 "SELECT x FROM t ORDER BY x NULLS LAST -- latest first\n",
+                 id="nulls-last-before-trailing-comment"),
+    pytest.param('SELECT x FROM t ORDER BY "limit"',
+                 "SELECT x FROM t ORDER BY `limit` NULLS LAST",
+                 id="keyword-as-quoted-sort-key"),
+    pytest.param("SELECT TRY(x /* a+b */ * 2) FROM t",
+                 "SELECT try_multiply(x /* a+b */, 2) FROM t",
+                 id="operator-in-comment"),
+    pytest.param("SELECT repeat(`a,b`, 2) FROM t",
+                 "SELECT array_repeat((`a,b`), (2)) FROM t",
+                 id="comma-in-backtick-argument"),
+    pytest.param("SELECT x FROM t WHERE `k` = ANY (SELECT k FROM u)",
+                 "SELECT x FROM t WHERE `k` IN (SELECT k FROM u)",
+                 id="quoted-quantified-operand"),
+    pytest.param("SELECT '2020-01-01 00:00:00' AT TIME ZONE 'UTC'",
+                 "SELECT tswtz('2020-01-01 00:00:00', 'UTC')",
+                 id="literal-at-time-zone-operand"),
+    pytest.param('SELECT "a`b" FROM t', "SELECT `a``b` FROM t",
+                 id="backtick-inside-double-quoted-ident"),
+])
+def test_dialect_rewrites_code_tokens_only(sql, expected):
+    assert translate(sql) == expected
+    assert translate(expected) == expected
+
+
 def test_dialect_split_literal_delimiter():
     """Presto split delimiters are LITERALS (StringFunctions.java);
     Spark's split takes a regex — metachar delimiters get \\Q...\\E

@@ -26,6 +26,38 @@ def test_translate_idempotent(sql):
     assert translate(once) == once
 
 
+_SPELLINGS = ["cardinality(", "a[1]", "zip(", "bitwise_and(", "TRY(",
+              "ARRAY[", "?", "'", '"', "`", "--", "/*", "*/", ")", ","]
+_LITERAL_TEXT = st.lists(
+    st.one_of(st.sampled_from(_SPELLINGS),
+              st.text(alphabet="abxyz019 _.,()[]+-*/%=<>", max_size=6)),
+    max_size=8).map("".join)
+
+
+@given(_LITERAL_TEXT, _LITERAL_TEXT, _LITERAL_TEXT,
+       st.sampled_from(["string", "dquote", "btick"]),
+       st.sampled_from(["block", "line"]))
+@settings(max_examples=300, deadline=None)
+def test_translate_keeps_literals_comments_and_quoted_names(
+        lit, comment, name, lit_kind, comment_kind):
+    """Presto spellings inside string literals, comments and quoted
+    identifiers pass through byte for byte; the one change is the
+    documented "…" → `…` respelling, which keeps the identifier text."""
+    def btick(text):
+        return "`" + text.replace("`", "``") + "`"
+
+    literal, expected_literal = {
+        "string": ("'" + lit.replace("'", "''") + "'",) * 2,
+        "dquote": ('"' + lit.replace('"', '""') + '"', btick(lit)),
+        "btick": (btick(lit),) * 2,
+    }[lit_kind]
+    remark = ("/*" + comment.replace("*/", "* /") + "*/"
+              if comment_kind == "block" else "--" + comment + "\n")
+    sql = "SELECT x, {} FROM t WHERE s = {} {}"
+    assert translate(sql.format(btick(name), literal, remark)) == \
+        sql.format(btick(name), expected_literal, remark)
+
+
 @given(IDENT)
 @settings(max_examples=100, deadline=None)
 def test_translate_leaves_unknown_functions_alone(name):

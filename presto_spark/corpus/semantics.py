@@ -24,6 +24,8 @@ import os
 import re
 from dataclasses import dataclass
 
+from presto_spark.functions.registry import ensure_functions
+
 REFERENCE_TESTS_DIR = (
     "/root/reference/presto-tests/src/main/java/com/facebook/presto/tests"
 )
@@ -443,7 +445,9 @@ def run_semantic_case(spark, duck, case: "SemanticCase",
         _LIMIT_RE.search(case.query) and not _ORDER_RE.search(case.query)
     ) or (reads_tables and _TIEBREAK_RE.search(case.query))
     try:
-        actual = spark.sql(translate(case.query)).collect()
+        text = translate(case.query)
+        ensure_functions(spark, text)
+        actual = spark.sql(text).collect()
     except Exception as e:  # noqa: BLE001 — triaged by the caller
         return SemanticOutcome(case.source, "engine-error",
                                f"{type(e).__name__}: {str(e)[:200]}")

@@ -22,9 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from presto_spark import prepared as _prep
 from presto_spark import show as _show
 from presto_spark.functions.dialect import translate
-from presto_spark.functions.registry import (register_functions,
-                                              register_geo_sql_functions,
-                                              register_llm_sql_functions)
+from presto_spark.functions.registry import ensure_functions
 from presto_spark.session_properties import set_session_property
 from presto_spark.sources.catalog import TABLES, register_tables
 
@@ -36,6 +34,9 @@ _SET_SESSION_RE = re.compile(
 class Engine:
     """A query engine session: catalog + Presto-compat functions + SQL.
 
+    Compat functions are registered on first use: each statement
+    registers the ones its (translated) text calls.
+
     Usage::
 
         eng = Engine(spark, sf_dir="/root/testdata/sf0.01")
@@ -44,11 +45,6 @@ class Engine:
 
     def __init__(self, spark: SparkSession, sf_dir: str | None = None, tables=TABLES):
         self.spark = spark
-        register_functions(spark)
-        # full SQL surface at the facade; registry rows register the
-        # geo/llm tiers lazily instead (analyzer-drag split, round 12)
-        register_geo_sql_functions(spark)
-        register_llm_sql_functions(spark)
         self.tables: dict[str, DataFrame] = {}
         self.prepared = _prep.PreparedStatements()
         if sf_dir is not None:
@@ -83,6 +79,7 @@ class Engine:
             return routed
         if dialect == "presto":
             query = translate(query)
+        ensure_functions(self.spark, query)
         return self.spark.sql(query)
 
     def _statement(self, query: str, dialect: str) -> DataFrame | None:
@@ -114,6 +111,7 @@ class Engine:
             text = _prep.substitute(stmt, ["NULL"] * n)
             if dialect == "presto":
                 text = translate(text)
+            ensure_functions(self.spark, text)
             schema = self.spark.sql(text).schema
             rows = [
                 (f.name, "", "", "", _prep.presto_type_name(f.dataType), 0, True)
@@ -152,6 +150,7 @@ class Engine:
             # an argument containing quotes or sentinel-shaped text
             # cannot break out of its expression context (ADVICE r6).
             text = _prep.splice_sentinels(text, args)
+            ensure_functions(self.spark, text)
             return self.spark.sql(text)
         return None
 

@@ -35,6 +35,7 @@ from presto_spark.sql_lexer import (
     STRING,
     lex,
     quoted_body,
+    strip,
 )
 
 # Pure renames, call-compatible 1:1.  (approx_distinct is NOT here — it
@@ -140,7 +141,7 @@ _PATTERN_RULES: list[tuple[re.Pattern[str], object]] = [
     (re.compile(r"\bbitwise_not\s*\(", re.IGNORECASE), "bit_not_scalar("),
 ]
 
-# Scalar bitwise shims used above — registered by registry.register_functions
+# Scalar bitwise shims used above — entries of registry.function_table()
 # (names don't collide with builtins; bodies are plain JVM expressions).
 BITWISE_UDFS = {
     "bit_and_scalar": ("a BIGINT, b BIGINT", "BIGINT", "a & b"),
@@ -1271,7 +1272,7 @@ def _rewrite_quantified_comparisons(sql: str) -> str:
         if quant == "SOME":
             quant = "ANY"
         start, end = _scan_left_operand(v, m.start())
-        lhs = sql[start:end].strip()
+        lhs = strip(sql[start:end])
         if not lhs:
             return sql
         if op == "=" and quant == "ANY":
@@ -1423,7 +1424,7 @@ def _rewrite_calls(sql: str, call_re: re.Pattern, build,
         if parsed is None:
             continue
         args, close = parsed
-        repl = build(m.group(1).lower(), [a.strip() for a in args])
+        repl = build(m.group(1).lower(), [strip(a) for a in args])
         if repl is not None:
             out += (sql[pos:m.start()], repl)
             pos = close + 1
@@ -1455,7 +1456,7 @@ def _build_approx_distinct(_name: str, args: list[str]) -> str | None:
 # expression evaluates on both sides of the comparison.
 _array_minmax_by_re = re.compile(
     r"\b(array_max_by|array_min_by)\s*\(", re.IGNORECASE)
-_lambda_re = re.compile(r"(?s)^\s*(\w+)\s*->\s*(.+?)\s*$")
+_lambda_re = re.compile(r"(?s)^\s*(\w+)\s*->\s*(.+)$")
 
 
 def _build_array_minmax_by(name: str, args: list[str]) -> str | None:
@@ -1465,7 +1466,7 @@ def _build_array_minmax_by(name: str, args: list[str]) -> str | None:
     if lam is None:
         return None
     op = ">" if name == "array_max_by" else "<"
-    param, body = lam.group(1), lam.group(2)
+    param, body = lam.group(1), strip(lam.group(2))
     sub = re.compile(rf"\b{re.escape(param)}\b")
     body_x = sub.sub("_ps_x", body)
     body_acc = sub.sub("_ps_acc", body)
@@ -1550,7 +1551,7 @@ def _rewrite_array_agg(sql: str) -> str:
                 continue
             if "_ps_v" in args[0]:  # already-rewritten inner call
                 continue
-            hit = (m, args[0].strip(), close)
+            hit = (m, strip(args[0]), close)
             break
         if hit is None:
             return sql
@@ -1768,7 +1769,7 @@ def _rewrite_at_time_zone(sql: str) -> str:
         if m is None:
             return sql
         start_l, end_l = _scan_left_operand(v, m.start())
-        left = sql[start_l:end_l].strip()
+        left = strip(sql[start_l:end_l])
         j = m.end()
         while j < len(sql) and sql[j].isspace():
             j += 1
@@ -1904,7 +1905,7 @@ def _rewrite_unnest(sql: str) -> str:
         tail = parsed and _unnest_tail_re.match(sql, parsed[1] + 1)
         if not tail:
             continue
-        args = [a.strip() for a in parsed[0]]
+        args = [strip(a) for a in parsed[0]]
         alias = tail.group(2) or "_ps_unnest"
         if tail.group(3):
             cols = [c.strip() for c in tail.group(3).split(",")]
@@ -1979,7 +1980,7 @@ def _split_top_binary(expr: str):
     idx = add_idx if add_idx is not None else mul_idx
     if idx is None:
         return None
-    return expr[:idx].strip(), expr[idx], expr[idx + 1:].strip()
+    return strip(expr[:idx]), expr[idx], strip(expr[idx + 1:])
 
 
 def _build_macro(name: str, args: list[str]) -> str | None:

@@ -12,11 +12,34 @@ builtin of different semantics are handled by the dialect rewriter
 
 Each entry cites the Presto source it reproduces.  All bodies are pure
 column expressions → they inline into codegen and scale like builtins.
+
+Functions are registered on demand, the way Presto resolves each
+function name per query from its function namespace instead of loading
+the library into every session.  ``function_table()`` is the one
+ordered table of every compat function — the SQL bodies below, the
+bitwise, color, geo and LLM bodies, and the Arrow UDFs — each with the
+other entries its body calls.  ``ensure_functions(spark, sql)``
+registers the entries that ``sql`` names in code (or as a quoted
+identifier) and the session lacks, dependencies first, and records them
+on the session object.  Every path that hands engine text to Spark's
+parser calls it (``Engine.sql``, ``show.route``, the registry
+builders), so a statement registers only the functions its text calls
+and a session that never calls a shim never pays for it.
+``register_functions``, ``register_geo_sql_functions`` and
+``register_llm_sql_functions`` register a whole tier through the same
+call.
 """
 
 from __future__ import annotations
 
+import importlib
+import re
+from dataclasses import dataclass, replace
+from functools import lru_cache
+
 from pyspark.sql import SparkSession
+
+from presto_spark.sql_lexer import BTICK, IDENT, lex
 
 
 def _ip2long(ip: str) -> str:
@@ -1034,294 +1057,284 @@ _SQL_UDFS: dict[str, tuple[str, str, str, str]] = {
 }
 
 
-from presto_spark.functions.dialect import BITWISE_UDFS
 
 
-def _ddl(name: str, args: str, ret: str, body: str) -> str:
-    return (f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-            f"RETURNS {ret} RETURN {body}")
+# ---- Arrow-batched UDFs: (tier, module, ((name, attribute), ...)) ----------
+_ARROW_UDFS = (
+    # ML scalar tier (presto-ml MLFunctions.java) — model-scoring UDFs;
+    # training lives in operators/ml.py as DataFrame operators (the
+    # reference trains inside a final-node aggregate, the same
+    # single-site semantics).
+    ("base", "presto_spark.operators.ml", (
+        ("classify", "classify"),
+        ("classify_varchar", "classify_varchar"),
+        ("regress", "regress"),
+    )),
+    # Extended-JSONPath tier (recursive descent / filters / bracket
+    # names / slices — Jayway fallback in the reference,
+    # JsonPath.java:140); the dialect layer routes literal extended
+    # paths here, plain paths stay on JVM get_json_object.
+    ("base", "presto_spark.functions._json_pandas_udfs", (
+        ("json_extract_py", "json_extract_py"),
+        ("json_extract_scalar_py", "json_extract_scalar_py"),
+        ("json_size_py", "json_size_py"),
+    )),
+    # Per-row datetime patterns (DateTimeFunctions.java evaluates the
+    # pattern per row; Spark's date_format wants a constant); the
+    # dialect layer routes column-valued patterns to these renderers,
+    # Teradata to_char/to_date/to_timestamp included
+    # (TeradataDateFunctions compiles per value at runtime).
+    ("base", "presto_spark.functions._datetime_pandas_udfs", (
+        ("date_format_py", "date_format_py"),
+        ("format_datetime_py", "format_datetime_py"),
+        ("date_parse_py", "date_parse_py"),
+        ("parse_datetime_py", "parse_datetime_py"),
+        ("to_char_td_py", "to_char_td_py"),
+        ("to_date_td_py", "to_date_td_py"),
+        ("to_timestamp_td_py", "to_timestamp_td_py"),
+    )),
+    # word_stem: full Porter parity (WordStemFunction.java → Lucene
+    # PorterStemmer); the JVM S-stemmer stays available as
+    # word_stem_simple for hot paths that accept the approximation.
+    ("base", "presto_spark.functions._text_pandas_udfs", (
+        ("word_stem", "word_stem_udf"),
+        ("jarowinkler_similarity", "jarowinkler_udf"),
+        ("normalize", "normalize_udf"),
+    )),
+    # Incomplete-integral CDF family (MathFunctions.java beta_cdf/
+    # binomial_cdf/chi_squared_cdf/f_cdf/gamma_cdf/poisson_cdf) — no
+    # closed form, so the regularized incomplete gamma/beta live in
+    # functions/stats.py.
+    ("base", "presto_spark.functions._stats_pandas_udfs", tuple(
+        (n, f"{n}_udf") for n in (
+            "beta_cdf", "binomial_cdf", "chi_squared_cdf", "f_cdf",
+            "gamma_cdf", "poisson_cdf", "inverse_beta_cdf", "t_cdf",
+            "inverse_t_cdf", "inverse_chi_squared_cdf",
+            "inverse_gamma_cdf", "inverse_f_cdf", "inverse_poisson_cdf",
+            "inverse_binomial_cdf"))),
+    # Binary-function tail (HmacFunctions.java; VarbinaryFunctions
+    # .java:250-307): HMAC, IEEE 754 byte codecs, murmur3_x64_128 — no
+    # JVM builtins exist; pinned against the reference's own test
+    # vectors (TestVarbinaryFunctions.java).
+    ("base", "presto_spark.functions._binary_pandas_udfs", tuple(
+        (n, f"{n}_udf") for n in (
+            "hmac_md5", "hmac_sha1", "hmac_sha256", "hmac_sha512",
+            "murmur3_x64_128", "to_ieee754_32", "from_ieee754_32",
+            "to_ieee754_64", "from_ieee754_64", "to_base32", "from_base32",
+            "spooky_hash_v2_32", "spooky_hash_v2_64", "fnv1_32", "fnv1_64",
+            "fnv1a_32", "fnv1a_64"))),
+    # Geometry ingest/emit and the DE-9IM matrix behind the geo SQL
+    # wrappers below.  "__st_asbinary3": the bare st_asbinary is a
+    # Spark 4.1 builtin (for Spark's native GEOMETRY type); dialect.py
+    # renames the Presto spelling to the __st_asbinary wrapper.
+    ("geo", "presto_spark.functions._geo_pandas_udfs", (
+        ("st_geometryfromtext", "parse_wkt_full_udf"),
+        ("st_geomfrombinary", "parse_wkb_udf"),
+        ("__st_asbinary3", "as_wkb_udf"),
+    )),
+    ("geo", "presto_spark.functions.geo_relate", (
+        ("__st_relate_matrix6", "_relate_udf"),
+    )),
+)
+
+
+def _geo_sql_udfs() -> dict[str, tuple[str, str, str]]:
+    """Geospatial SQL spellings: accessors and the DE-9IM predicates,
+    each predicate one regex scan over the matrix string (one Arrow
+    call per pair regardless of which predicate is asked).  The
+    struct→coordinate decomposition happens here because ragged
+    array<array<struct>> pandas-UDF inputs trip the Arrow converter."""
+    geo_t = ("STRUCT<kind: STRING, "
+             "rings: ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>>")
+    xs = "transform(g.rings, r -> transform(r, p -> p.x))"
+    ys = "transform(g.rings, r -> transform(r, p -> p.y))"
+    m = ("__st_relate_matrix6(a.kind, "
+         "transform(a.rings, r -> transform(r, p -> p.x)), "
+         "transform(a.rings, r -> transform(r, p -> p.y)), "
+         "b.kind, "
+         "transform(b.rings, r -> transform(r, p -> p.x)), "
+         "transform(b.rings, r -> transform(r, p -> p.y)))")
+    dim = ("CASE WHEN {0}.kind IN ('POINT', 'MULTIPOINT') THEN 0 "
+           "WHEN {0}.kind IN ('LINESTRING', 'MULTILINESTRING') THEN 1 "
+           "WHEN {0}.kind IN ('POLYGON', 'MULTIPOLYGON') THEN 2 END")
+    da, db = dim.format("a"), dim.format("b")
+    ab = f"a {geo_t}, b {geo_t}"
+    return {
+        "__st_asbinary": (f"g {geo_t}", "BINARY",
+                          f"__st_asbinary3(g.kind, {xs}, {ys})"),
+        "st_point": ("x DOUBLE, y DOUBLE", geo_t,
+                     "named_struct('kind', 'POINT', 'rings', "
+                     "array(array(named_struct('x', x, 'y', y))))"),
+        "st_x": (f"g {geo_t}", "DOUBLE",
+                 "CASE WHEN g.kind = 'POINT' THEN g.rings[0][0].x END"),
+        "st_y": (f"g {geo_t}", "DOUBLE",
+                 "CASE WHEN g.kind = 'POINT' THEN g.rings[0][0].y END"),
+        "st_geometrytype": (
+            f"g {geo_t}", "STRING",
+            "CASE g.kind WHEN 'POINT' THEN 'ST_Point' "
+            "WHEN 'MULTIPOINT' THEN 'ST_MultiPoint' "
+            "WHEN 'LINESTRING' THEN 'ST_LineString' "
+            "WHEN 'MULTILINESTRING' THEN 'ST_MultiLineString' "
+            "WHEN 'POLYGON' THEN 'ST_Polygon' "
+            "WHEN 'MULTIPOLYGON' THEN 'ST_MultiPolygon' "
+            "WHEN 'GEOMETRYCOLLECTION' THEN 'ST_GeomCollection' END"),
+        # DE-9IM pattern positions: II IB IE BI BB BE EI EB EE.
+        # Malformed (non-NULL, not 9 chars over TF012*) patterns RAISE
+        # like the reference's Esri relate(); a NULL pattern stays NULL.
+        "st_relate": (
+            f"{ab}, p STRING", "BOOLEAN",
+            "CASE WHEN p IS NULL THEN CAST(NULL AS BOOLEAN) "
+            "WHEN p RLIKE '^[TF012*]{9}$' THEN "
+            f"{m} RLIKE "
+            "concat('^', replace(replace(p, 'T', '[012]'), '*', '.'), '$') "
+            "ELSE CAST(raise_error(concat('Invalid DE-9IM pattern: ', p)) "
+            "AS BOOLEAN) END"),
+        "st_touches": (ab, "BOOLEAN", f"{m} RLIKE '^F([^F]|..[^F]|...[^F])'"),
+        "st_disjoint": (ab, "BOOLEAN", f"{m} RLIKE '^FF.FF'"),
+        "st_equals": (ab, "BOOLEAN", f"{m} RLIKE '^[^F].F..FFF'"),
+        "st_contains": (ab, "BOOLEAN", f"{m} RLIKE '^[^F].{{5}}FF'"),
+        "st_within": (ab, "BOOLEAN", f"{m} RLIKE '^[^F].F..F'"),
+        "st_intersects": (ab, "BOOLEAN", f"NOT ({m} RLIKE '^FF.FF')"),
+        # NULL/collection inputs have NULL dims — lead with the NULL
+        # guard so the ELSE-false arms can't turn NULL into false (dims
+        # are plain CASE expressions, so the guard costs no extra
+        # matrix UDF call)
+        "st_crosses": (
+            ab, "BOOLEAN",
+            f"CASE WHEN ({da}) IS NULL OR ({db}) IS NULL "
+            "THEN CAST(NULL AS BOOLEAN) "
+            f"WHEN ({da}) < ({db}) THEN {m} RLIKE '^[^F].[^F]' "
+            f"WHEN ({da}) > ({db}) THEN {m} RLIKE '^[^F].{{5}}[^F]' "
+            f"WHEN ({da}) = 1 AND ({db}) = 1 "
+            f"THEN substring({m}, 1, 1) = '0' ELSE false END"),
+        "st_overlaps": (
+            ab, "BOOLEAN",
+            f"CASE WHEN ({da}) IS NULL OR ({db}) IS NULL "
+            "THEN CAST(NULL AS BOOLEAN) "
+            f"WHEN ({da}) != ({db}) THEN false "
+            f"WHEN ({da}) = 1 THEN {m} RLIKE '^1.[^F].{{3}}[^F]' "
+            f"ELSE {m} RLIKE '^[^F].[^F].{{3}}[^F]' END"),
+    }
+
+
+@dataclass(frozen=True)
+class CompatFunction:
+    """One compat function: a SQL body, or an Arrow UDF named by its
+    module and attribute (imported when first registered)."""
+
+    name: str
+    tier: str  # "base", "geo" or "llm"
+    args: str = ""
+    ret: str = ""
+    body: str | None = None
+    udf: tuple[str, str] | None = None
+    cite: str = ""
+    calls: tuple[str, ...] = ()  # other table names the body calls
+
+    def register(self, spark: SparkSession) -> None:
+        if self.body is None:
+            module, attr = self.udf
+            spark.udf.register(self.name,
+                               getattr(importlib.import_module(module), attr))
+        else:
+            spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {self.name}"
+                      f"({self.args}) RETURNS {self.ret} RETURN {self.body}")
+
+
+_WORD_RE = re.compile(r"\b[A-Za-z_]\w*")
+
+
+def _names_in(sql: str, names) -> set[str]:
+    """Members of ``names`` that ``sql`` spells in code or as a quoted or
+    backtick identifier — never inside a string literal or a comment."""
+    v = lex(sql)
+    found = {m.group().lower() for m in v.finditer(_WORD_RE)}
+    found.update(sql[s + 1:e - 1].lower() for kind, s, e in v.tokens
+                 if kind in (IDENT, BTICK))
+    return found & names
+
+
+@lru_cache(maxsize=None)
+def function_table() -> dict[str, CompatFunction]:
+    """Every compat function, in registration order, each with the other
+    entries its body calls (computed once, from the body's code
+    tokens)."""
+    from presto_spark.functions.color import COLOR_UDFS
+    from presto_spark.functions.dialect import BITWISE_UDFS
+    from presto_spark.functions.geo_sql_measures import sql_measure_udfs
+    from presto_spark.functions.llm_sql import llm_sql_udfs
+
+    rows = [CompatFunction(n, "base", a, r, b, cite=c)
+            for n, (a, r, b, c) in _SQL_UDFS.items()]
+    rows += [CompatFunction(n, "base", a, r, b, cite="BitwiseFunctions.java")
+             for n, (a, r, b) in BITWISE_UDFS.items()]
+    rows += [CompatFunction(n, "base", a, r, b, cite=c)
+             for n, (a, r, b, c) in COLOR_UDFS.items()]
+    rows += [CompatFunction(n, tier, udf=(module, attr))
+             for tier, module, pairs in _ARROW_UDFS for n, attr in pairs]
+    for tier, udfs in (("geo", _geo_sql_udfs()), ("geo", sql_measure_udfs()),
+                       ("llm", llm_sql_udfs())):
+        rows += [CompatFunction(n, tier, a, r, b)
+                 for n, (a, r, b) in udfs.items()]
+    names = {f.name for f in rows}
+    order = {n: i for i, n in enumerate(f.name for f in rows)}
+    return {f.name: replace(f, calls=tuple(sorted(
+                _names_in(f.body, names) - {f.name}, key=order.get)))
+            if f.body else f for f in rows}
+
+
+def registered_functions(spark: SparkSession) -> set[str]:
+    """The compat functions registered on this session so far.  Kept on
+    the session object: temp functions belong to one session, and
+    ``newSession()`` starts with none."""
+    return vars(spark).setdefault("_presto_spark_functions", set())
+
+
+def ensure_functions(spark: SparkSession, sql: str) -> list[str]:
+    """Register every compat function that ``sql`` names (in code, or
+    as a quoted or backtick identifier) and this session does not have
+    yet, each after the functions its body calls.  Returns the names
+    registered now.  Failures raise — a shim that silently failed to
+    register would surface as a confusing parse error instead."""
+    table = function_table()
+    done = registered_functions(spark)
+    new: list[str] = []
+
+    def add(name: str) -> None:
+        if name not in done:
+            fn = table[name]
+            for dep in fn.calls:
+                add(dep)
+            fn.register(spark)
+            done.add(name)
+            new.append(name)
+
+    wanted = _names_in(sql, table.keys())
+    for name in table:
+        if name in wanted:
+            add(name)
+    return new
+
+
+def _ensure_tier(spark: SparkSession, tier: str) -> list[str]:
+    return ensure_functions(spark, " ".join(
+        n for n, f in function_table().items() if f.tier == tier))
 
 
 def register_functions(spark: SparkSession) -> list[str]:
-    """Register the Presto-compat SQL UDFs into this session.
-
-    Returns the list of registered names.  Failures raise — a shim that
-    silently fails to register would surface as a confusing parse error
-    at query time instead.
-    """
-    registered = []
-    for name, (args, ret, body, _cite) in _SQL_UDFS.items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    for name, (args, ret, body) in BITWISE_UDFS.items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    # Color/bar terminal-rendering tier (ColorFunctions.java) — bodies
-    # are generated SQL text, see functions/color.py.
-    from presto_spark.functions.color import COLOR_UDFS
-
-    for name, (args, ret, body, _cite) in COLOR_UDFS.items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    # ML scalar tier (presto-ml MLFunctions.java) — Arrow-batched
-    # model-scoring UDFs; training lives in operators/ml.py as
-    # DataFrame operators (the reference trains inside a final-node
-    # aggregate, the same single-site semantics).
-    from presto_spark.operators import ml as _ml
-
-    for name, fn in (
-        ("classify", _ml.classify),
-        ("classify_varchar", _ml.classify_varchar),
-        ("regress", _ml.regress),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # Extended-JSONPath tier (recursive descent / filters / bracket names /
-    # slices — Jayway fallback in the reference, JsonPath.java:140).
-    # Arrow-batched pandas UDFs; the dialect layer routes literal extended
-    # paths here, plain paths stay on JVM get_json_object.
-    from presto_spark.functions import _json_pandas_udfs as _jp
-
-    for name, fn in (
-        ("json_extract_py", _jp.json_extract_py),
-        ("json_extract_scalar_py", _jp.json_extract_scalar_py),
-        ("json_size_py", _jp.json_size_py),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # Per-row datetime patterns (DateTimeFunctions.java evaluates the
-    # pattern per row; Spark's date_format wants a constant).  The dialect
-    # layer routes column-valued patterns to these Arrow-batched renderers.
-    from presto_spark.functions import _datetime_pandas_udfs as _dtp
-
-    for name, fn in (
-        ("date_format_py", _dtp.date_format_py),
-        ("format_datetime_py", _dtp.format_datetime_py),
-        ("date_parse_py", _dtp.date_parse_py),
-        ("parse_datetime_py", _dtp.parse_datetime_py),
-        # Teradata to_char/to_date/to_timestamp with column-valued
-        # formats (TeradataDateFunctions compiles per value at runtime)
-        ("to_char_td_py", _dtp.to_char_td_py),
-        ("to_date_td_py", _dtp.to_date_td_py),
-        ("to_timestamp_td_py", _dtp.to_timestamp_td_py),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # word_stem: full Porter parity (WordStemFunction.java → Lucene
-    # PorterStemmer).  Arrow-batched; the JVM S-stemmer stays available
-    # as word_stem_simple for hot paths that accept the approximation.
-    from presto_spark.functions import _text_pandas_udfs as _tp
-
-    spark.udf.register("word_stem", _tp.word_stem_udf)
-    spark.udf.register("jarowinkler_similarity", _tp.jarowinkler_udf)
-    spark.udf.register("normalize", _tp.normalize_udf)
-    registered += ["word_stem", "jarowinkler_similarity", "normalize"]
-    # Incomplete-integral CDF family (MathFunctions.java beta_cdf/
-    # binomial_cdf/chi_squared_cdf/f_cdf/gamma_cdf/poisson_cdf) —
-    # no closed form, so the regularized incomplete gamma/beta live in
-    # functions/stats.py behind Arrow-batched UDFs.
-    from presto_spark.functions import _stats_pandas_udfs as _sp
-
-    for name, fn in (
-        ("beta_cdf", _sp.beta_cdf_udf),
-        ("binomial_cdf", _sp.binomial_cdf_udf),
-        ("chi_squared_cdf", _sp.chi_squared_cdf_udf),
-        ("f_cdf", _sp.f_cdf_udf),
-        ("gamma_cdf", _sp.gamma_cdf_udf),
-        ("poisson_cdf", _sp.poisson_cdf_udf),
-        ("inverse_beta_cdf", _sp.inverse_beta_cdf_udf),
-        ("t_cdf", _sp.t_cdf_udf),
-        ("inverse_t_cdf", _sp.inverse_t_cdf_udf),
-        ("inverse_chi_squared_cdf", _sp.inverse_chi_squared_cdf_udf),
-        ("inverse_gamma_cdf", _sp.inverse_gamma_cdf_udf),
-        ("inverse_f_cdf", _sp.inverse_f_cdf_udf),
-        ("inverse_poisson_cdf", _sp.inverse_poisson_cdf_udf),
-        ("inverse_binomial_cdf", _sp.inverse_binomial_cdf_udf),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # Binary-function tail (HmacFunctions.java; VarbinaryFunctions
-    # .java:250-307): HMAC, IEEE 754 byte codecs, murmur3_x64_128 —
-    # no JVM builtins exist, Arrow-batched UDFs pinned against the
-    # reference's own test vectors (TestVarbinaryFunctions.java).
-    from presto_spark.functions import _binary_pandas_udfs as _bp
-
-    for name, fn in (
-        ("hmac_md5", _bp.hmac_md5_udf),
-        ("hmac_sha1", _bp.hmac_sha1_udf),
-        ("hmac_sha256", _bp.hmac_sha256_udf),
-        ("hmac_sha512", _bp.hmac_sha512_udf),
-        ("murmur3_x64_128", _bp.murmur3_x64_128_udf),
-        ("to_ieee754_32", _bp.to_ieee754_32_udf),
-        ("from_ieee754_32", _bp.from_ieee754_32_udf),
-        ("to_ieee754_64", _bp.to_ieee754_64_udf),
-        ("from_ieee754_64", _bp.from_ieee754_64_udf),
-        ("to_base32", _bp.to_base32_udf),
-        ("from_base32", _bp.from_base32_udf),
-        ("spooky_hash_v2_32", _bp.spooky_hash_v2_32_udf),
-        ("spooky_hash_v2_64", _bp.spooky_hash_v2_64_udf),
-        ("fnv1_32", _bp.fnv1_32_udf),
-        ("fnv1_64", _bp.fnv1_64_udf),
-        ("fnv1a_32", _bp.fnv1a_32_udf),
-        ("fnv1a_64", _bp.fnv1a_64_udf),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    return registered
-
-
+    """Register the whole base tier (string/math/datetime/JSON/binary/
+    color shims and the Arrow UDFs) on this session."""
+    return _ensure_tier(spark, "base")
 
 
 def register_geo_sql_functions(spark: SparkSession) -> list[str]:
-    """Register the geospatial SQL surface (ingest/emit/relate tier,
-    DE-9IM predicates, measures + SPHERICAL_GEOGRAPHY spellings).
-
-    Split out of register_functions (round 12): ~20 SQL temp
-    functions, several with multi-KB fold bodies, measurably slow
-    Spark's per-iteration analysis of UNRELATED iterative queries
-    (WITH RECURSIVE re-analyzes per UnionLoop step; the recursive
-    bench rows regressed ~40% with the tier registered).  The Engine
-    facade registers it always (full SQL surface); registry rows that
-    run geo SQL text call this explicitly; everything else skips the
-    analyzer drag.  Memoized via a flag attribute stashed on the
-    session object itself — an id(spark) key in a module-global set
-    can collide when a stopped session's address is reused by a new
-    one, silently skipping registration (ADVICE r12); the attribute
-    dies with the session it marks.
-    """
-    if getattr(spark, "_presto_spark_geo_sql_ready", False):
-        return []
-    spark._presto_spark_geo_sql_ready = True
-    registered: list[str] = []
-    # Geospatial SQL spellings (round 12, VERDICT r11 next-round #8):
-    # the reference surface is SQL, so the ingest/emit/relate tier —
-    # already Arrow-batched UDFs — registers under its Presto names,
-    # and the DE-9IM predicates become SQL UDFs doing one regex scan
-    # over the matrix string (one Arrow call per pair regardless of
-    # which predicate is asked).  Measures/overlay/accessors remain
-    # DataFrame-level (functions/geo.py Column builders — a SQL-text
-    # duplicate of those expressions would be a second engine;
-    # documented tier split in COVERAGE.md).  The struct→coordinate
-    # decomposition happens in the SQL wrapper bodies because ragged
-    # array<array<struct>> pandas-UDF inputs trip the Arrow converter.
-    from presto_spark.functions import _geo_pandas_udfs as _gpu
-    from presto_spark.functions.geo_relate import _relate_udf as _gru
-
-    spark.udf.register("st_geometryfromtext", _gpu.parse_wkt_full_udf)
-    spark.udf.register("st_geomfrombinary", _gpu.parse_wkb_udf)
-    spark.udf.register("__st_asbinary3", _gpu.as_wkb_udf)
-    spark.udf.register("__st_relate_matrix6", _gru)
-    registered += ["st_geometryfromtext", "st_geomfrombinary"]
-    _GEO_T = ("STRUCT<kind: STRING, "
-              "rings: ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>>")
-    _XS = "transform(g.rings, r -> transform(r, p -> p.x))"
-    _YS = "transform(g.rings, r -> transform(r, p -> p.y))"
-    _M = ("__st_relate_matrix6(a.kind, "
-          "transform(a.rings, r -> transform(r, p -> p.x)), "
-          "transform(a.rings, r -> transform(r, p -> p.y)), "
-          "b.kind, "
-          "transform(b.rings, r -> transform(r, p -> p.x)), "
-          "transform(b.rings, r -> transform(r, p -> p.y)))")
-    _DIM = ("CASE WHEN {0}.kind IN ('POINT', 'MULTIPOINT') THEN 0 "
-            "WHEN {0}.kind IN ('LINESTRING', 'MULTILINESTRING') THEN 1 "
-            "WHEN {0}.kind IN ('POLYGON', 'MULTIPOLYGON') THEN 2 END")
-    _AB = f"a {_GEO_T}, b {_GEO_T}"
-    for name, args, ret, body in (
-        # "__st_asbinary": the bare name is a Spark 4.1 builtin (for
-        # Spark's native GEOMETRY type); dialect.py renames the Presto
-        # spelling to this wrapper
-        ("__st_asbinary", f"g {_GEO_T}", "BINARY",
-         f"__st_asbinary3(g.kind, {_XS}, {_YS})"),
-        ("st_point", "x DOUBLE, y DOUBLE", _GEO_T,
-         "named_struct('kind', 'POINT', 'rings', "
-         "array(array(named_struct('x', x, 'y', y))))"),
-        ("st_x", f"g {_GEO_T}", "DOUBLE",
-         "CASE WHEN g.kind = 'POINT' THEN g.rings[0][0].x END"),
-        ("st_y", f"g {_GEO_T}", "DOUBLE",
-         "CASE WHEN g.kind = 'POINT' THEN g.rings[0][0].y END"),
-        ("st_geometrytype", f"g {_GEO_T}", "STRING",
-         "CASE g.kind WHEN 'POINT' THEN 'ST_Point' "
-         "WHEN 'MULTIPOINT' THEN 'ST_MultiPoint' "
-         "WHEN 'LINESTRING' THEN 'ST_LineString' "
-         "WHEN 'MULTILINESTRING' THEN 'ST_MultiLineString' "
-         "WHEN 'POLYGON' THEN 'ST_Polygon' "
-         "WHEN 'MULTIPOLYGON' THEN 'ST_MultiPolygon' "
-         "WHEN 'GEOMETRYCOLLECTION' THEN 'ST_GeomCollection' END"),
-        # DE-9IM family: one matrix call, one regex scan per predicate
-        # (pattern positions: II IB IE BI BB BE EI EB EE)
-        # malformed (non-NULL, not 9 chars over TF012*) patterns RAISE
-        # like the reference's Esri relate(); NULL pattern stays NULL
-        ("st_relate", f"{_AB}, p STRING", "BOOLEAN",
-         "CASE WHEN p IS NULL THEN CAST(NULL AS BOOLEAN) "
-         "WHEN p RLIKE '^[TF012*]{9}$' THEN "
-         f"{_M} RLIKE "
-         "concat('^', replace(replace(p, 'T', '[012]'), '*', '.'), '$') "
-         "ELSE CAST(raise_error(concat('Invalid DE-9IM pattern: ', p)) "
-         "AS BOOLEAN) END"),
-        ("st_touches", _AB, "BOOLEAN",
-         f"{_M} RLIKE '^F([^F]|..[^F]|...[^F])'"),
-        ("st_disjoint", _AB, "BOOLEAN", f"{_M} RLIKE '^FF.FF'"),
-        ("st_equals", _AB, "BOOLEAN", f"{_M} RLIKE '^[^F].F..FFF'"),
-        ("st_contains", _AB, "BOOLEAN", f"{_M} RLIKE '^[^F].{{5}}FF'"),
-        ("st_within", _AB, "BOOLEAN", f"{_M} RLIKE '^[^F].F..F'"),
-        ("st_intersects", _AB, "BOOLEAN", f"NOT ({_M} RLIKE '^FF.FF')"),
-        # NULL/collection inputs have NULL dims — lead with the NULL
-        # guard so the ELSE-false arms can't turn NULL into false
-        # (dims are plain CASE expressions, so the guard costs no
-        # extra matrix UDF call)
-        ("st_crosses", _AB, "BOOLEAN",
-         f"CASE WHEN ({_DIM.format('a')}) IS NULL "
-         f"OR ({_DIM.format('b')}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-         f"WHEN ({_DIM.format('a')}) < ({_DIM.format('b')}) "
-         f"THEN {_M} RLIKE '^[^F].[^F]' "
-         f"WHEN ({_DIM.format('a')}) > ({_DIM.format('b')}) "
-         f"THEN {_M} RLIKE '^[^F].{{5}}[^F]' "
-         f"WHEN ({_DIM.format('a')}) = 1 AND ({_DIM.format('b')}) = 1 "
-         f"THEN substring({_M}, 1, 1) = '0' ELSE false END"),
-        ("st_overlaps", _AB, "BOOLEAN",
-         f"CASE WHEN ({_DIM.format('a')}) IS NULL "
-         f"OR ({_DIM.format('b')}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-         f"WHEN ({_DIM.format('a')}) != ({_DIM.format('b')}) "
-         "THEN false "
-         f"WHEN ({_DIM.format('a')}) = 1 "
-         f"THEN {_M} RLIKE '^1.[^F].{{3}}[^F]' "
-         f"ELSE {_M} RLIKE '^[^F].[^F].{{3}}[^F]' END"),
-    ):
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    # Measure tier + SPHERICAL_GEOGRAPHY SQL spellings (round 12,
-    # VERDICT r11 #8): hand-transliterated twins of the Column folds,
-    # bit-parity-pinned by tests/test_geo_sql_measures.py.
-    from presto_spark.functions.geo_sql_measures import sql_measure_udfs
-
-    for name, (args, ret, body) in sql_measure_udfs().items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    return registered
+    """Register the whole geospatial SQL tier (ingest/emit/relate, DE-9IM
+    predicates, measures + SPHERICAL_GEOGRAPHY spellings)."""
+    return _ensure_tier(spark, "geo")
 
 
 def register_llm_sql_functions(spark: SparkSession) -> list[str]:
-    """Register the LLM scalar tier's SQL spellings (round 14, VERDICT
-    r13 next-round #3): poly_hash/fingerprint, simhash16,
-    split_bucket, html_to_text, quality_score — the north-star
-    operators a SQL-first user needs without dropping to the
-    DataFrame API.
-
-    Same lazy split as register_geo_sql_functions (the simhash body
-    unrolls 16 aggregate folds — analyzer drag for unrelated
-    iterative queries if always-registered): the Engine facade
-    registers it always, registry rows that run the SQL names call
-    this explicitly, everything else skips it.  Memoized via a
-    session attribute (not id(spark) — address reuse, ADVICE r12).
-    """
-    if getattr(spark, "_presto_spark_llm_sql_ready", False):
-        return []
-    spark._presto_spark_llm_sql_ready = True
-    from presto_spark.functions.llm_sql import llm_sql_udfs
-
-    registered: list[str] = []
-    for name, (args, ret, body) in llm_sql_udfs().items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    return registered
-
+    """Register the whole LLM scalar tier's SQL spellings (poly_hash/
+    fingerprint, simhash16, split_bucket, html_to_text,
+    quality_score)."""
+    return _ensure_tier(spark, "llm")

@@ -25,27 +25,32 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from presto_spark.functions.registry import register_functions
+from presto_spark.functions.registry import ensure_functions
 from presto_spark.sources.catalog import register_tables
-
-_FUNCS_READY: set[int] = set()
-_CURRENT_SF_DIR: dict[int, str] = {}
 
 
 def prepare(spark: SparkSession, sf_dir: str) -> None:
-    """Register tables and compat functions (each once per session).
+    """Register the tables of ``sf_dir`` (once per session).
 
-    Table registration is memoized on the session's *current* sf_dir —
-    re-registering rereads 10 parquet footers per query, pure driver
-    overhead that dominated small-SF bench times; switching sf_dir
-    re-registers so the views always point at the requested data.
+    Memoized on the session's *current* sf_dir, kept on the session
+    object (a key on ``id(spark)`` would let a new session that reuses a
+    stopped one's address skip registration) — re-registering rereads
+    10 parquet footers per query, pure driver overhead that dominated
+    small-SF bench times; switching sf_dir re-registers so the views
+    always point at the requested data.  Compat functions are not
+    registered here: each builder registers the ones its text calls
+    (``registry.ensure_functions``).
     """
-    if _CURRENT_SF_DIR.get(id(spark)) != sf_dir:
+    if getattr(spark, "_presto_spark_sf_dir", None) != sf_dir:
         register_tables(spark, sf_dir)
-        _CURRENT_SF_DIR[id(spark)] = sf_dir
-    if id(spark) not in _FUNCS_READY:
-        register_functions(spark)
-        _FUNCS_READY.add(id(spark))
+        spark._presto_spark_sf_dir = sf_dir
+
+
+def run_sql(spark: SparkSession, text: str) -> DataFrame:
+    """``spark.sql(text)`` after registering the compat functions that
+    ``text`` calls — the one way a builder hands SQL text to Spark."""
+    ensure_functions(spark, text)
+    return spark.sql(text)
 
 
 @dataclass
@@ -89,7 +94,7 @@ def sql_query(name, spark_sql, oracle=None, doc="", tags=()):
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepare(spark, sf_dir)
-        return spark.sql(spark_sql)
+        return run_sql(spark, spark_sql)
 
     fn.__name__ = name
     fn.__doc__ = doc or spark_sql

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from presto_spark.corpus.fixtures import register_fixtures
 from presto_spark.functions.dialect import translate
-from presto_spark.queries.base import prepare, register
+from presto_spark.queries.base import prepare, register, run_sql
 
 # (name, presto-dialect SQL producing one boolean column `ok`) —
 # every expected literal below is transcribed from the named
@@ -194,7 +194,7 @@ def corpus_product_golden(spark, sf_dir):
     from functools import reduce
 
     parts = [
-        spark.sql(f"SELECT '{name}' AS tc, ok FROM ({translate(sql)})")
+        run_sql(spark, f"SELECT '{name}' AS tc, ok FROM ({translate(sql)})")
         for name, sql in _CASES
     ]
     # the fixture views shadow the sf-dir nation/region; every part's

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from presto_spark.functions import geo
 from presto_spark.operators import spatial_join
-from presto_spark.queries.base import prepare, register
+from presto_spark.queries.base import prepare, register, run_sql
 
 
 _GCD_ORACLE = """
@@ -2240,11 +2240,8 @@ ORDER BY metric, k
     tags=("geo", "functions", "dialect"),
 )
 def geo_sql_measures_golden(spark, sf_dir):
-    from presto_spark.functions.registry import register_geo_sql_functions
-
     prepare(spark, sf_dir)
-    register_geo_sql_functions(spark)
-    return spark.sql(_SQL_MEASURES_TEXT)
+    return run_sql(spark, _SQL_MEASURES_TEXT)
 
 
 _RELATE_COLLECTIONS_ORACLE = """

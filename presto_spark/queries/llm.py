@@ -10,7 +10,7 @@ Spark side runs the real DataFrame transforms from presto_spark.llm.
 from pyspark.sql import functions as F
 
 from presto_spark.llm import dedup, multimodal, similarity, text
-from presto_spark.queries.base import prepare, register
+from presto_spark.queries.base import prepare, register, run_sql
 
 # ---- shared DuckDB SQL fragments (mirror llm/text.py + llm/dedup.py) ----
 
@@ -1705,7 +1705,7 @@ def llm_html_extract(spark, sf_dir):
     FROM stats ORDER BY doc_id
     """,
     doc="SQL spellings of the LLM scalar tier (functions/llm_sql.py, "
-        "registered via registry.register_llm_sql_functions — round "
+        "registered on first use by registry.ensure_functions — round "
         "14, VERDICT r13 next-round #3: the north-star operators were "
         "DataFrame-only, unreachable from engine.sql): ONE spark.sql "
         "text exercises poly_hash/fingerprint (31-base char fold), "
@@ -1720,11 +1720,8 @@ def llm_html_extract(spark, sf_dir):
     tags=("llm", "text", "dialect", "bench"),
 )
 def llm_sql_spellings(spark, sf_dir):
-    from presto_spark.functions.registry import register_llm_sql_functions
-
     prepare(spark, sf_dir)
-    register_llm_sql_functions(spark)
-    return spark.sql("""
+    return run_sql(spark, """
         SELECT doc_id,
                poly_hash(text) AS ph,
                fingerprint(text) AS fp,

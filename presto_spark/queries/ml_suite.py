@@ -17,6 +17,7 @@ features, so OLS recovers it to < 1e-6.
 
 from pyspark.sql import functions as F
 
+from presto_spark.functions.registry import ensure_functions
 from presto_spark.operators import ml
 from presto_spark.queries.base import prepare, register
 
@@ -47,6 +48,7 @@ SELECT CAST(121 AS BIGINT) AS n,
 )
 def ml_learn_classify_golden(spark, sf_dir):
     prepare(spark, sf_dir)
+    ensure_functions(spark, "classify regress classify_varchar")  # F.expr texts
     k = F.col("c_custkey")
     feats = F.create_map(
         F.lit(0).cast("long"),

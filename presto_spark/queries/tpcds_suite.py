@@ -901,15 +901,26 @@ sql_query(
              OR (p.p_type LIKE 'STANDARD%%' AND p.p_size >= 35))
       GROUP BY p.p_brand, year(l.l_shipdate), month(l.l_shipdate)
     ),
+    w AS (
+      SELECT mgr, y, mo, sales_c,
+             sum(sales_c) OVER (PARTITION BY mgr, y) AS yr_sum_c,
+             count(sales_c) OVER (PARTITION BY mgr, y) AS yr_n
+      FROM m
+    ),
     d AS (
       SELECT mgr, y, mo, sales_c,
-             CAST(sum(sales_c) OVER (PARTITION BY mgr, y) AS DOUBLE)
-               / count(sales_c) OVER (PARTITION BY mgr, y) AS yr_avg_c
-      FROM m
+             CAST(yr_sum_c AS DOUBLE) / yr_n AS yr_avg_c,
+             -- the yearly average rounded half up to whole cents in
+             -- exact integer arithmetic, (2 sum + n) div (2 n): an
+             -- average of exactly x.5 cents is not binary-exact as a
+             -- DOUBLE, and Spark and DuckDB round that DOUBLE apart
+             ((2 * yr_sum_c + yr_n) - (2 * yr_sum_c + yr_n) % (2 * yr_n))
+               / (2 * yr_n) AS yr_avg_rounded_c
+      FROM w
     )
     SELECT mgr, y, mo,
            round(CAST(sales_c AS DOUBLE) / 100.0, 2) AS sales,
-           round(yr_avg_c / 100.0, 2) AS yr_avg
+           yr_avg_rounded_c / 100.0 AS yr_avg
     FROM d
     WHERE yr_avg_c > 0
       AND abs(CAST(sales_c AS DOUBLE) - yr_avg_c) / yr_avg_c > 0.1
@@ -919,7 +930,9 @@ sql_query(
         "item classes compared to the yearly average): the disjunctive "
         "type/size bucket predicate stays on the dimension side "
         "of the join, one (mgr, y, mo) agg shuffle, one partition-wide "
-        "avg() window, deviation filter.",
+        "avg() window, deviation filter.  The yearly average is "
+        "rounded to cents in integers, so an exact half-cent average "
+        "rounds up on both engines.",
     tags=("tpcds", "bench"),
 )
 

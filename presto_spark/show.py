@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from presto_spark.functions.registry import ensure_functions, function_table
 from presto_spark.prepared import presto_type_name
 
 SHOW_FUNCTIONS_RE = re.compile(
@@ -172,8 +173,7 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
     Types, Function Type, Deterministic, Description
     (ShowQueriesRewrite.java; registry spec
     BuiltInTypeAndFunctionNamespaceManager.java:525)."""
-    from presto_spark.functions.dialect import _SIMPLE_MAP, BITWISE_UDFS
-    from presto_spark.functions.registry import _SQL_UDFS
+    from presto_spark.functions.dialect import _SIMPLE_MAP
 
     rows: list[tuple[str, str, str, str, bool, str]] = []
     seen: set[str] = set()
@@ -184,17 +184,22 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
         seen.add(name)
         rows.append((name, ret, args, ftype, True, desc))
 
-    for name, (args, ret, _body, cite) in _SQL_UDFS.items():
-        add(name, _presto_spell(ret), _sig_arg_types(args), "scalar", cite)
-    for name, (args, ret, _body) in BITWISE_UDFS.items():
-        add(name, _presto_spell(ret), _sig_arg_types(args), "scalar",
-            "BitwiseFunctions.java")
+    # the compat table is the namespace: listed whether or not this
+    # session has registered an entry yet
+    table = function_table()
+    for name, fn in table.items():
+        if fn.body is not None:
+            add(name, _presto_spell(fn.ret), _sig_arg_types(fn.args),
+                "scalar", fn.cite)
     for name, (args, ret, desc) in _PANDAS_SHIMS.items():
         add(name, ret, args, "scalar", desc)
     for name, target in _SIMPLE_MAP.items():
         add(name, "", "", "scalar", f"dialect rename -> {target}")
     for name, (args, ret, desc) in _DIALECT_SPELLINGS.items():
         add(name, ret, args, "scalar", desc)
+    for name in table:
+        if not name.endswith("_py"):  # internal per-row plumbing
+            add(name, "", "", "scalar", "")
     # Spark builtins round out the callable surface; the catalog exposes
     # name/description only (no typed signatures), mirrored as-is.
     for fn in spark.catalog.listFunctions():
@@ -356,6 +361,7 @@ def route(spark: SparkSession, query: str,
             inner = m.group(2)
             if translate_fn is not None:
                 inner = translate_fn(inner)
+            ensure_functions(spark, inner)
             target = spark.sql(inner)
         return show_stats(spark, target)
     return None

@@ -151,6 +151,17 @@ def lex(sql: str) -> Lexed:
     return Lexed(sql)
 
 
+def strip(text: str) -> str:
+    """``text.strip()``, keeping the line break that ends a trailing
+    ``--`` comment, so code placed after the result stays code."""
+    out = text.strip()
+    if "--" in out:
+        kind, s, _ = lex(out).tokens[-1]
+        if kind == COMMENT and out.startswith("--", s):
+            out += "\n"
+    return out
+
+
 def quoted_body(text: str, quote: str = "'") -> str | None:
     """The body of ``text`` (quotes off, doubled quotes kept) when it is
     exactly one closed token quoted with ``quote``; None otherwise (so

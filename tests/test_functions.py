@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from presto_spark.functions.dialect import translate
+from presto_spark.functions.registry import register_functions
 from presto_spark.queries.base import prepare
 from tests.conftest import SF_DIR
 
@@ -19,6 +20,7 @@ from tests.conftest import SF_DIR
 @pytest.fixture(scope="module", autouse=True)
 def _prep(spark):
     prepare(spark, SF_DIR)
+    register_functions(spark)  # the tests below call the shims directly
 
 
 def one(spark, expr):
@@ -92,6 +94,26 @@ def test_dialect_translate_renames():
                  id="backtick-inside-double-quoted-ident"),
 ])
 def test_dialect_rewrites_code_tokens_only(sql, expected):
+    assert translate(sql) == expected
+    assert translate(expected) == expected
+
+
+@pytest.mark.parametrize("sql,expected", [
+    ("SELECT repeat(x -- c\n, 3) FROM t",
+     "SELECT array_repeat((x -- c\n), (3)) FROM t"),
+    ("SELECT TRY(x -- c\n * 2) FROM t",
+     "SELECT try_multiply(x -- c\n, 2) FROM t"),
+    ("SELECT approx_distinct(x -- c\n) FROM t",
+     "SELECT approx_count_distinct(x -- c\n, 0.023) FROM t"),
+    ("SELECT array_max_by(a, v -> v -- c\n) FROM t",
+     "SELECT aggregate((a), element_at((a), 1), (_ps_acc, _ps_x) -> "
+     "CASE WHEN (_ps_x -- c\n) > (_ps_acc -- c\n) THEN _ps_x "
+     "ELSE _ps_acc END) FROM t"),
+])
+def test_dialect_keeps_line_break_after_stripped_comment(sql, expected):
+    """A rewrite that strips a call argument keeps the line break that
+    ends the argument's trailing ``--`` comment; without it the code
+    the rewrite places after the argument would become comment."""
     assert translate(sql) == expected
     assert translate(expected) == expected
 

@@ -8,7 +8,9 @@ HTML, NULL)."""
 import pytest
 from pyspark.sql import functions as F
 
-from presto_spark.functions.registry import register_llm_sql_functions
+from presto_spark.functions.registry import (function_table,
+                                             register_llm_sql_functions,
+                                             registered_functions)
 from presto_spark.llm import dedup, mix, text
 from tests.conftest import SF_DIR
 
@@ -88,10 +90,12 @@ def test_sql_spellings_reachable_via_engine(spark):
 
 
 def test_registration_is_idempotent_per_session(spark):
-    """Second registration call is a memoized no-op (session-attribute
-    guard, not id(spark) — the geo tier's address-reuse lesson), and
-    the functions still resolve afterwards."""
-    first = register_llm_sql_functions(spark)  # may be [] if another
-    second = register_llm_sql_functions(spark)  # test registered first
-    assert second == []
+    """The session's registered set (kept on the session object, not
+    keyed by id(spark) — the address-reuse lesson) holds the whole tier
+    after one call, so a second call registers nothing, and the
+    functions still resolve afterwards."""
+    register_llm_sql_functions(spark)
+    tier = {n for n, f in function_table().items() if f.tier == "llm"}
+    assert tier <= registered_functions(spark)
+    assert register_llm_sql_functions(spark) == []
     assert spark.sql("SELECT poly_hash('abc') AS v").collect()[0].v > 0
